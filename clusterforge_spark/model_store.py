@@ -33,6 +33,7 @@ import time as _time
 import uuid
 from dataclasses import dataclass
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
@@ -91,11 +92,17 @@ def save_model(
 
 
 def model_exists(spark: SparkSession, path: str) -> bool:
-    """True if ``path`` holds a readable saved model (meta present)."""
+    """True if ``path`` holds a readable saved model (meta present).
+
+    Only a missing ``meta/`` means "no model": an unreadable or corrupt
+    one raises, so a caller never silently refits over a saved model.
+    """
     try:
         rows = spark.read.parquet(f"{path.rstrip('/')}/meta").collect()
-    except Exception:
-        return False
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return False
+        raise
     return any(r.key == "format_version" for r in rows)
 
 

@@ -141,17 +141,23 @@ def fit_kmeans(
 
     if not (MIN_K <= k <= MAX_K):
         raise ValueError(f"Number of clusters must be between {MIN_K} and {MAX_K}, got {k}")
-    n = scaled.count()
-    if n < k:
-        raise ValueError(f"Number of data points ({n}) must be >= number of clusters ({k})")
 
     assembler = VectorAssembler(inputCols=list(cols), outputCol="features")
-    # cache the assembled vectors: Lloyd's revisits them every iteration
-    # (MLlib warns about uncached input for exactly this reason)
+    # cache the assembled vectors for the fit only: Lloyd's revisits them
+    # every iteration (MLlib warns about uncached input for exactly this
+    # reason); a cache left behind would be matched by plan and serve a
+    # later call stale data. The n guard's count fills the cache, so an
+    # uncached input is computed once.
     vec = assembler.transform(scaled).cache()
     km = KMeans(k=k, maxIter=max_iter, tol=tol, seed=seed, featuresCol="features",
                 predictionCol="cluster")
-    model = km.fit(vec)
+    try:
+        n = vec.count()
+        if n < k:
+            raise ValueError(f"Number of data points ({n}) must be >= number of clusters ({k})")
+        model = km.fit(vec)
+    finally:
+        vec.unpersist()
     assigned = model.transform(vec).drop("features")
     return KMeansResult(
         model=model,

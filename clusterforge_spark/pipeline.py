@@ -16,20 +16,22 @@ Differences from the reference, by design (SURVEY.md §7):
     deterministic) — the aggregation/scan stays fully distributed and
     only k centroids × d floats of state matter; above the threshold we
     fit with distributed MLlib. This is the same regime split MLlib
-    itself uses internally (centroids always live on the driver).
+    itself uses internally (centroids always live on the driver). The
+    distributed branch caches the RFM table and releases it on return.
 """
 
 from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field
+from functools import cached_property
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from clusterforge_spark.operators import clustering as C
 from clusterforge_spark.operators import features as FE
-from clusterforge_spark.operators import metrics as M
 from clusterforge_spark.sources.readers import load_table, read_retail_csv
 
 ZCOLS = ("recency_z", "frequency_z", "monetary_z")
@@ -52,13 +54,10 @@ class PipelineResult:
     #: viz/report paths read ``assignments``, so the plan is built on
     #: first access (same laziness Spark itself gives the EXECUTION)
     assignments_builder: object | None = field(default=None, repr=False)
-    _assignments: DataFrame | None = field(default=None, repr=False)
 
-    @property
+    @cached_property
     def assignments(self) -> DataFrame | None:
-        if self._assignments is None and self.assignments_builder is not None:
-            self._assignments = self.assignments_builder()
-        return self._assignments
+        return self.assignments_builder() if self.assignments_builder else None
 
 
 def _numpy_kmeans(feats, k: int, max_iter: int, tol: float, seed: int):
@@ -157,8 +156,11 @@ def run_full_pipeline(
     values but ~125 MB of CPython Row-object heap during the collect —
     comfortably inside a default driver while leaving headroom for the
     result holder; beyond it the pipeline switches to the distributed
-    MLlib branch (tests/test_persistence.py pins that branch). See
-    SCALE.md for the derivation.
+    MLlib branch: one stats job fills a cache of the RFM table and gives
+    n and the scaler, the silhouette is computed on the driver from the
+    bounded ``silhouette_n``-row sample, and nothing stays cached
+    (tests/test_persistence.py pins that branch). See SCALE.md for the
+    derivation.
     """
     import numpy as np
 
@@ -177,38 +179,33 @@ def run_full_pipeline(
     # the dense matrix too (data.rs:16-41).
     # The limit(threshold+1) probe is ONE action in the common small-n
     # regime (a count-first branch decision costs a second full agg job —
-    # measured 2× slower at sf0.1). If the limit is hit we are in the
-    # distributed regime: discard the probe rows (bounded waste,
-    # ≤ threshold+1) and compute the TRUE customer count with an agg-only
-    # job so PipelineResult.n_customers is never the clipped threshold+1.
-    # Interactive small-query fast path: AQE's per-exchange
-    # materialization barriers (each a separate re-optimized job) cost
-    # more than they can save on this fixed two-stage bounded probe —
-    # measured 0.37 s vs 0.71 s median at sf0.1. Scoped + restored:
-    # everything at corpus scale (the distributed MLlib branch, dedup,
-    # joins) still runs under AQE.
+    # measured 2× slower at sf0.1). If the limit is hit, the probe rows are
+    # discarded (≤ threshold+1 bounded waste) and the table is cached for
+    # the rest of the call: one aggregate fills it and gives the TRUE
+    # count and the scaler's μ, σ. Caching before the probe would save
+    # that pass but slowed the small-n path ~5% (rfm_retail benchmark).
+    # AQE's per-exchange materialization barriers (each a separate
+    # re-optimized job) cost more than they can save on this fixed
+    # two-stage bounded probe — measured 0.37 s vs 0.71 s median at
+    # sf0.1. Scoped + restored: everything at corpus scale (the
+    # distributed MLlib branch, dedup, joins) still runs under AQE.
+    base = rfm.select("user_id", *FE.RFM_COLS)
     aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        rows = (
-            rfm.select("user_id", *FE.RFM_COLS).limit(driver_fit_threshold + 1).collect()
-        )
+        rows = base.limit(driver_fit_threshold + 1).collect()
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
-    if len(rows) > driver_fit_threshold:
-        rows = []
-        n = rfm.count()
-    else:
+    if len(rows) <= driver_fit_threshold:
         # sort by key: the fitted model must not depend on partition/collect
         # order (seeded init indexes into this matrix)
         rows.sort(key=lambda r: r.user_id)
         n = len(rows)
-    timings["rfm_scale"] = time.perf_counter() - t0
-    if n < k:
-        raise ValueError(f"Number of data points ({n}) must be >= number of clusters ({k})")
+        timings["rfm_scale"] = time.perf_counter() - t0
+        if n < k:
+            raise ValueError(f"Number of data points ({n}) must be >= number of clusters ({k})")
 
-    t0 = time.perf_counter()
-    if n <= driver_fit_threshold:
+        t0 = time.perf_counter()
         # small-n fast path: post-aggregation data fits on the driver by
         # construction → numpy population-σ scaler (σ-floor 1e-8,
         # data.rs:31-37) + seeded Lloyd's; everything downstream (sizes,
@@ -233,34 +230,48 @@ def run_full_pipeline(
         timings["kmeans_fit"] = time.perf_counter() - t0
 
         t0 = time.perf_counter()
-        idx = np.arange(min(n, silhouette_n))  # rows already key-sorted
-        sil = _numpy_silhouette(x[idx], labels[idx])
-        timings["silhouette"] = time.perf_counter() - t0
-        cent_t = tuple(tuple(c) for c in centroids)
-        assigned = None
-        assign_builder = lambda: C.assign_nearest(  # noqa: E731
-            FE.scale_features(rfm), cent_t, ZCOLS
-        )
+        sample_x, sample_labels = x[:silhouette_n], labels[:silhouette_n]  # key-sorted
     else:
-        scaled = FE.scale_features(rfm).cache()
-        res = C.fit_kmeans(scaled, k=k, max_iter=max_iter, tol=tol, seed=seed, cols=ZCOLS)
-        centroids, inertia = res.centroids, res.inertia
-        scaler_params = FE.fit_scaler(rfm).collect()[0].asDict()
-        mllib_model = res.model
-        assigned = C.assign_nearest(
-            scaled, tuple(tuple(c) for c in centroids), ZCOLS
-        ).cache()
-        sizes = [
-            (r.cluster, r.size, r.pct) for r in C.cluster_sizes(assigned).collect()
-        ]
-        timings["kmeans_fit"] = time.perf_counter() - t0
+        rows = []
+        # a cache the caller holds on the same plan is used and kept
+        release = base.storageLevel == StorageLevel.NONE
+        base = base.cache()
+        try:
+            # FE.fit_scaler's expressions, plus the count
+            aggs = [F.count("*").alias("n")]
+            for c in FE.RFM_COLS:
+                aggs.append(F.avg(c).alias(f"{c}_mean"))
+                aggs.append(F.greatest(F.stddev_pop(c), F.lit(1e-8)).alias(f"{c}_std"))
+            scaler_params = base.agg(*aggs).collect()[0].asDict()
+            n = scaler_params.pop("n")
+            timings["rfm_scale"] = time.perf_counter() - t0
 
-        t0 = time.perf_counter()
-        sil = M.silhouette_mean(
-            M.silhouette_sample(assigned, id_col="user_id", cols=ZCOLS, n=silhouette_n)
-        ).collect()[0].mean_silhouette
-        timings["silhouette"] = time.perf_counter() - t0
-        assign_builder = None
+            t0 = time.perf_counter()
+            # literal z = (x − μ)/σ: map-only over the cache, bit-identical
+            # to FE.transform_scaler's broadcast-join form
+            scaled = base.select("user_id", *[
+                ((F.col(c) - scaler_params[f"{c}_mean"]) / scaler_params[f"{c}_std"]).alias(z)
+                for c, z in zip(FE.RFM_COLS, ZCOLS)
+            ])
+            # fit_kmeans applies the n >= k guard
+            res = C.fit_kmeans(scaled, k=k, max_iter=max_iter, tol=tol, seed=seed, cols=ZCOLS)
+            centroids, inertia, mllib_model = res.centroids, res.inertia, res.model
+            assigned = C.assign_nearest(scaled, tuple(tuple(c) for c in centroids), ZCOLS)
+            sizes = [(r.cluster, r.size, r.pct) for r in C.cluster_sizes(assigned).collect()]
+            timings["kmeans_fit"] = time.perf_counter() - t0
+
+            t0 = time.perf_counter()
+            # metrics.silhouette_sample's key-ordered sample, bounded by
+            # silhouette_n: one takeOrdered job, then scored on the driver
+            sample = assigned.orderBy("user_id").limit(silhouette_n).collect()
+            sample_x = np.array([[r[z] for z in ZCOLS] for r in sample])
+            sample_labels = np.array([r.cluster for r in sample])
+        finally:
+            if release:
+                base.unpersist()
+    sil = _numpy_silhouette(sample_x, sample_labels)
+    timings["silhouette"] = time.perf_counter() - t0
+    cent_t = tuple(tuple(c) for c in centroids)
 
     result = PipelineResult(
         n_rows=n_rows,
@@ -269,11 +280,10 @@ def run_full_pipeline(
         centroids=[list(map(float, c)) for c in centroids],
         inertia=float(inertia),
         cluster_sizes=sizes,
-        silhouette=float(sil) if sil is not None else None,
+        silhouette=sil,
         timings=timings,
         scaler_params=scaler_params,
-        assignments_builder=assign_builder,
-        _assignments=assigned,
+        assignments_builder=lambda: C.assign_nearest(FE.scale_features(rfm), cent_t, ZCOLS),
     )
     if model_path is not None:
         from clusterforge_spark.model_store import save_model
@@ -355,9 +365,8 @@ def run_prediction(
     result = run_full_pipeline(
         spark, rfm, n_rows=-1, k=k, seed=seed, model_path=model_path, **kwargs
     )
-    params = result.scaler_params or FE.fit_scaler(rfm).collect()[0].asDict()
     cluster, _dist = C.predict_point(
-        params, tuple(tuple(c) for c in result.centroids), point
+        result.scaler_params, tuple(tuple(c) for c in result.centroids), point
     )
     return cluster, result
 

@@ -80,6 +80,87 @@ def test_mllib_model_saved_in_distributed_regime(spark, tmp_path):
         assert g == pytest.approx(want)
 
 
+def test_distributed_branch_matches_operator_pipeline(spark):
+    """The distributed branch's one-stats-job scaler, literal scaling and
+    driver-side silhouette give what the public operators give."""
+    from clusterforge_spark.operators import metrics as M
+    from clusterforge_spark.pipeline import ZCOLS
+
+    rfm = _rfm(spark)
+    res = run_full_pipeline(spark, rfm, n_rows=-1, k=4, seed=42, driver_fit_threshold=2)
+    assert res.scaler_params == FE.fit_scaler(rfm).collect()[0].asDict()
+
+    scaled = FE.scale_features(rfm)
+    ref = C.fit_kmeans(scaled, k=4, seed=42, cols=ZCOLS)
+    assert res.centroids == ref.centroids
+    assert res.inertia == ref.inertia
+    assigned = C.assign_nearest(scaled, tuple(tuple(c) for c in ref.centroids), ZCOLS)
+    sizes = [(r.cluster, r.size, r.pct) for r in C.cluster_sizes(assigned).collect()]
+    assert sorted(res.cluster_sizes) == sorted(sizes)
+    sil = M.silhouette_mean(
+        M.silhouette_sample(assigned, id_col="user_id", cols=ZCOLS)
+    ).collect()[0].mean_silhouette
+    assert res.silhouette == pytest.approx(sil, abs=2e-4)
+
+
+def _write_events(path: str, n_customers: int) -> None:
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(n_customers)
+    user = np.repeat(np.arange(n_customers), rng.integers(1, 6, n_customers))
+    n = len(user)
+    ts = np.datetime64("2024-06-30", "us") - rng.integers(0, 365 * 86_400 * 10**6, n)
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(np.arange(n), pa.int64()),
+            "ts": pa.array(ts, pa.timestamp("us")),
+            "user_id": pa.array(10_000 + user, pa.int64()),
+            "event_type": pa.array(["purchase"] * n),
+            "value": pa.array(np.round(rng.lognormal(3.0, 1.0, n), 2), pa.float64()),
+            "props": pa.array(["{}"] * n),
+        }),
+        path,
+    )
+
+
+def test_distributed_branch_sees_rewritten_input_and_leaves_nothing_cached(spark, tmp_path):
+    """A cache left behind by one call is matched by plan on the next call
+    over the same path, which then mixes the old file's rows into its
+    result: every cache the call creates must be gone when it returns."""
+    # the emptiness check is session-wide: drop the other modules' caches
+    spark.catalog.clearCache()
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    for n in (400, 600):
+        _write_events(str(tmp_path / "events.parquet"), n)
+        rfm = FE.compute_rfm(load_table(spark, str(tmp_path), "events"))
+        res = run_full_pipeline(spark, rfm, n_rows=-1, k=4, seed=42, driver_fit_threshold=50)
+        assert res.n_customers == n
+        assert sum(size for _, size, _ in res.cluster_sizes) == n
+        assert cache_manager.isEmpty()
+    # a cache the caller made on the same plan is used and left in place
+    rfm = FE.compute_rfm(load_table(spark, str(tmp_path), "events")).cache()
+    run_full_pipeline(spark, rfm, n_rows=-1, k=4, seed=42, driver_fit_threshold=50)
+    assert rfm.storageLevel.useMemory
+    rfm.unpersist()
+
+
+def test_model_exists_is_false_only_for_a_missing_model(spark, tmp_path):
+    from pyspark.errors import AnalysisException
+
+    assert not MS.model_exists(spark, str(tmp_path / "absent"))
+    corrupt = tmp_path / "corrupt"
+    (corrupt / "meta").mkdir(parents=True)
+    (corrupt / "meta" / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        MS.model_exists(spark, str(corrupt))
+    empty = tmp_path / "empty"
+    (empty / "meta").mkdir(parents=True)
+    with pytest.raises(AnalysisException, match="UNABLE_TO_INFER_SCHEMA"):
+        MS.model_exists(spark, str(empty))
+
+
 # ---------------------------------------------------------------------------
 # r8: the derived-artifact registry (trained ANN index, graph tables,
 # clustered corpus) — fingerprint-validated parquet state that lets a
