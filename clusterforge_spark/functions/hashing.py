@@ -161,11 +161,6 @@ def shingle_hashes_from_tokens(toks: str, n: int = 3) -> Column:
     )
 
 
-def min_hash_col(hashes_col: str) -> Column:
-    """Smallest hash — a 1-permutation min-hash document fingerprint."""
-    return F.array_min(F.col(hashes_col)).cast("long")
-
-
 # ---------------------------------------------------------------------------
 # k-permutation MinHash (cross-engine exact)
 # ---------------------------------------------------------------------------

@@ -182,15 +182,6 @@ def dist2_lit(col: str, vals: list[float]) -> Column:
     return _fold(diffs)
 
 
-def cosine_cols(col_a: str, col_b: str, dim: int = DIM) -> Column:
-    """cosine between two embedding columns (for pairwise near-dup).
-    NULL (not DIVIDE_BY_ZERO) when either vector is zero-norm."""
-    prods = F.zip_with(
-        F.col(col_a), F.col(col_b), lambda x, y: x.cast("double") * y.cast("double")
-    )
-    return F.try_divide(_fold(prods), norm_col(col_a, dim) * norm_col(col_b, dim))
-
-
 def lsh_bucket(col: str, planes: list[list[float]] = HYPERPLANES) -> Column:
     """Sign-LSH bucket id: bit j = [dot(e, plane_j) >= 0]."""
     bits = [

@@ -1,26 +1,30 @@
-"""Model persistence: fitted scaler + centroids saved as parquet, with
-optional MLlib-native model format alongside.
+"""Model persistence: a fitted scaler + centroids saved as one JSON file.
 
 The reference has NO persistence — predict mode refits from raw data on
 every invocation (main.rs:44-52). SURVEY.md §7 (hard spot 8) calls out
 model reuse as the primary API improvement: at 100 TB a refit-per-predict
 is absurd. What a fitted segmentation actually *is* is tiny — k·d
-centroid floats plus 2·d scaler params — so the engine-level format is
-plain parquet (portable across engines, readable by anything), and the
-serving path is the existing literal-broadcast geometry
-(operators/clustering.assign_nearest / predict_point): map-only, no
-MLlib dependency at inference time.
+centroid floats plus 2·d scaler params — so it is stored as one small
+JSON document, and the serving path is the existing literal-broadcast
+geometry (operators/clustering.assign_nearest / predict_point):
+map-only, no MLlib dependency at inference time.
 
-Layout under ``<path>/``:
-  scaler/      1-row parquet: {col}_mean / {col}_std per feature col
-  centroids/   rows (cluster int, center array<double>) in scaled space
-  meta/        rows (key string, value string): k, cols, inertia, sizes
-  mllib/       (optional) pyspark.ml native KMeansModel.save output —
-               written when a fitted MLlib handle is available, so JVM
-               pipelines can model.load() it directly.
+Layout: ``<path>/model.json``, one JSON object (format version 2):
+  format_version  "2"
+  k, cols         cluster count and the feature columns, in order
+  scaler_params   {col}_mean / {col}_std per feature col
+  centroids       k lists of d floats in scaled space, index = cluster id
+  cluster_sizes   [cluster, size, pct] rows
+  inertia         float, or null
 
-All writes go through Spark writers, so the path may be any Hadoop-FS
-URI (local, HDFS, s3a), same as any table.
+``json`` writes floats with ``repr``, so every double round-trips
+bit-exactly. The file is written and read through the path's Hadoop
+FileSystem over py4j, so the path may be any Hadoop-FS URI (local, HDFS,
+s3a), and saving or loading a model creates no DataFrame and runs no
+Spark job. A save writes a hidden temp sibling and renames it over
+``model.json``, so a reader sees the old model or the new one. Format-1
+models (parquet ``scaler/``, ``centroids/``, ``meta/`` directories) are
+not readable: ``load_model`` raises on them, and a refit saves format 2.
 """
 
 from __future__ import annotations
@@ -33,13 +37,15 @@ import time as _time
 import uuid
 from dataclasses import dataclass
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from clusterforge_spark.sources import readers as _R
 
 _LOG = logging.getLogger("clusterforge_spark.model_store")
+
+MODEL_FILE = "model.json"
+MODEL_FORMAT_VERSION = "2"
 
 
 @dataclass
@@ -54,6 +60,13 @@ class SavedModel:
     inertia: float | None
 
 
+def _model_file(spark: SparkSession, path: str):
+    """(Hadoop package, FileSystem, Path of ``<path>/model.json``)."""
+    fs_pkg = spark._jvm.org.apache.hadoop.fs
+    f = fs_pkg.Path(fs_pkg.Path(path), MODEL_FILE)
+    return fs_pkg, f.getFileSystem(spark._jsc.hadoopConfiguration()), f
+
+
 def save_model(
     spark: SparkSession,
     path: str,
@@ -64,72 +77,73 @@ def save_model(
     cols: tuple[str, ...],
     cluster_sizes: list[tuple[int, int, float]] | None = None,
     inertia: float | None = None,
-    mllib_model=None,
 ) -> None:
-    """Persist a fitted scaler + centroids (and optionally the MLlib model)."""
-    base = path.rstrip("/")
-    spark.createDataFrame([tuple(float(scaler_params[key]) for key in sorted(scaler_params))],
-                          schema=", ".join(f"`{key}` double" for key in sorted(scaler_params))
-                          ).write.mode("overwrite").parquet(f"{base}/scaler")
-    spark.createDataFrame(
-        [(int(i), [float(v) for v in c]) for i, c in enumerate(centroids)],
-        schema="cluster int, center array<double>",
-    ).write.mode("overwrite").parquet(f"{base}/centroids")
-    meta = {
-        "k": str(int(k)),
-        "cols": json.dumps(list(cols)),
-        "inertia": "" if inertia is None else repr(float(inertia)),
-        "cluster_sizes": json.dumps(
-            [[int(c), int(s), float(p)] for c, s, p in (cluster_sizes or [])]
-        ),
-        "format_version": "1",
+    """Persist a fitted scaler + centroids as ``<path>/model.json``
+    (overwrite): written to a hidden temp sibling, then renamed into place."""
+    doc = {
+        "format_version": MODEL_FORMAT_VERSION,
+        "k": int(k),
+        "cols": list(cols),
+        "scaler_params": {key: float(v) for key, v in sorted(scaler_params.items())},
+        "centroids": [[float(v) for v in c] for c in centroids],
+        "cluster_sizes": [[int(c), int(s), float(p)] for c, s, p in (cluster_sizes or [])],
+        "inertia": None if inertia is None else float(inertia),
     }
-    spark.createDataFrame(
-        sorted(meta.items()), schema="key string, value string"
-    ).write.mode("overwrite").parquet(f"{base}/meta")
-    if mllib_model is not None:
-        mllib_model.write().overwrite().save(f"{base}/mllib")
+    fs_pkg, fs, dst = _model_file(spark, path)
+    tmp = fs_pkg.Path(dst.getParent(), f".{MODEL_FILE}.{uuid.uuid4().hex[:12]}.tmp")
+    try:
+        out = fs.create(tmp, True)
+        try:
+            out.write(bytearray(json.dumps(doc).encode()))
+        finally:
+            out.close()
+        overwrite = spark.sparkContext._gateway.new_array(fs_pkg.Options.Rename, 1)
+        overwrite[0] = fs_pkg.Options.Rename.OVERWRITE
+        fs_pkg.FileContext.getFileContext(dst.toUri(), spark._jsc.hadoopConfiguration()
+                                          ).rename(tmp, dst, overwrite)
+    except BaseException:
+        fs.delete(tmp, False)
+        raise
+
+
+def load_model(spark: SparkSession, path: str) -> SavedModel | None:
+    """The model saved at ``path``, or None when ``path`` does not exist.
+
+    A path that exists without a readable format-2 ``model.json`` (an
+    empty directory, a format-1 parquet model, a truncated file) raises
+    ``ValueError``, so a caller never silently refits over a saved model."""
+    _, fs, f = _model_file(spark, path)
+    if not fs.exists(f.getParent()):
+        return None
+    if not fs.isFile(f):
+        raise ValueError(f"{path} holds no {MODEL_FILE} (not a format-"
+                         f"{MODEL_FORMAT_VERSION} model)")
+    stream = fs.open(f)
+    try:
+        data = stream.readAllBytes()
+    finally:
+        stream.close()
+    try:
+        doc = json.loads(data)
+        if doc["format_version"] != MODEL_FORMAT_VERSION:
+            raise ValueError(f"format_version {doc['format_version']!r}")
+        return SavedModel(
+            k=int(doc["k"]),
+            cols=tuple(doc["cols"]),
+            scaler_params={key: float(v) for key, v in doc["scaler_params"].items()},
+            centroids=[[float(v) for v in c] for c in doc["centroids"]],
+            cluster_sizes=[(int(c), int(s), float(p)) for c, s, p in doc["cluster_sizes"]],
+            inertia=None if doc["inertia"] is None else float(doc["inertia"]),
+        )
+    except (ValueError, KeyError, TypeError) as e:
+        raise ValueError(f"{path}/{MODEL_FILE} is not a format-"
+                         f"{MODEL_FORMAT_VERSION} model: {e}") from e
 
 
 def model_exists(spark: SparkSession, path: str) -> bool:
-    """True if ``path`` holds a readable saved model (meta present).
-
-    Only a missing ``meta/`` means "no model": an unreadable or corrupt
-    one raises, so a caller never silently refits over a saved model.
-    """
-    try:
-        rows = spark.read.parquet(f"{path.rstrip('/')}/meta").collect()
-    except AnalysisException as e:
-        if e.getCondition() == "PATH_NOT_FOUND":
-            return False
-        raise
-    return any(r.key == "format_version" for r in rows)
-
-
-def load_model(spark: SparkSession, path: str) -> SavedModel:
-    base = path.rstrip("/")
-    meta = {r.key: r.value for r in spark.read.parquet(f"{base}/meta").collect()}
-    scaler_row = spark.read.parquet(f"{base}/scaler").collect()[0]
-    cen_rows = sorted(
-        spark.read.parquet(f"{base}/centroids").collect(), key=lambda r: r.cluster
-    )
-    return SavedModel(
-        k=int(meta["k"]),
-        cols=tuple(json.loads(meta["cols"])),
-        scaler_params=scaler_row.asDict(),
-        centroids=[[float(v) for v in r.center] for r in cen_rows],
-        cluster_sizes=[
-            (int(c), int(s), float(p)) for c, s, p in json.loads(meta["cluster_sizes"])
-        ],
-        inertia=float(meta["inertia"]) if meta["inertia"] else None,
-    )
-
-
-def load_mllib_model(spark: SparkSession, path: str):
-    """Load the MLlib-native model saved alongside (raises if absent)."""
-    from pyspark.ml.clustering import KMeansModel
-
-    return KMeansModel.load(f"{path.rstrip('/')}/mllib")
+    """True if ``path`` holds a saved model, False if ``path`` does not
+    exist; anything else raises (see :func:`load_model`)."""
+    return load_model(spark, path) is not None
 
 
 # ---------------------------------------------------------------------------

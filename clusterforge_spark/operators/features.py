@@ -40,23 +40,20 @@ def _ref_us(ref_instant: str) -> F.Column:
 def compute_rfm(
     events: DataFrame,
     ref_instant: str = DEFAULT_REF_INSTANT,
-    single_exchange: bool = True,
 ) -> DataFrame:
     """Per-user RFM features over the events table (O6-O12).
 
     events columns used: user_id (customer key), ts (event time), event_id
     (invoice analog), value (amount analog).
 
-    ``single_exchange`` (default): pre-partition the events by ``user_id``
-    before the aggregate. Catalyst plans a grouped exact COUNT(DISTINCT)
-    as two aggregation levels — (user_id, event_id) then (user_id) — and
+    The events are pre-partitioned by ``user_id`` before the aggregate.
+    Catalyst plans a grouped exact COUNT(DISTINCT) as two aggregation
+    levels — (user_id, event_id) then (user_id) — and
     ``hashpartitioning(user_id)`` satisfies BOTH levels' clustered
     distributions, so the whole chain runs on ONE exchange instead of two
-    (measured 0.39 s vs 0.58 s median at sf0.1). The trade-off is that
-    the shuffle carries raw rows rather than map-side partial aggregates;
-    with near-unique (user_id, event_id) keys the volumes are identical,
-    but for corpora with heavy per-invoice row duplication pass ``False``
-    to restore the classic two-phase partial-agg plan.
+    (measured 0.39 s vs 0.58 s median at sf0.1). The shuffle carries raw
+    rows rather than map-side partial aggregates; with near-unique
+    (user_id, event_id) keys the volumes are identical.
 
     The exchange's partition count is sized from the source file bytes
     (partitioning.suggest_agg_partitions): megabyte-scale inputs get a
@@ -65,11 +62,10 @@ def compute_rfm(
     conf — the explicit repartition is otherwise invisible to AQE's
     coalescing.
     """
-    if single_exchange:
-        from clusterforge_spark.functions.partitioning import suggest_agg_partitions
+    from clusterforge_spark.functions.partitioning import suggest_agg_partitions
 
-        n = suggest_agg_partitions(events)
-        events = events.repartition(n, "user_id") if n else events.repartition("user_id")
+    n = suggest_agg_partitions(events)
+    events = events.repartition(n, "user_id") if n else events.repartition("user_id")
     return (
         events.groupBy("user_id")
         .agg(

@@ -4811,56 +4811,6 @@ def grubbs_outlier(lineitem: DataFrame) -> DataFrame:
     )
 
 
-def jarque_bera(lineitem: DataFrame, orders: DataFrame) -> DataFrame:
-    """Jarque-Bera normality test on the GLOBAL order-to-ship latency
-    distribution — the one-number companion to the per-priority
-    :func:`latency_moments` profile: JB = n·(S²/6 + K²/24) with S the
-    sample skewness and K the excess kurtosis, asymptotically χ²(2)
-    under normality. Latency is the rare column where the x⁴ power sum
-    stays exact at ANY scale (day counts are small integers: x⁴ ≤ ~2e8,
-    so Σx⁴ over 10¹² rows is < 10²¹ ≪ decimal(38,0)); the moment ratios
-    and JB are one fixed IEEE expression on exact inputs, bit-stable
-    across engines.  Reference parity: extends main.rs's report stage
-    (stats summary) with the normality screen the reference prints
-    means/stddevs for but never tests.
-    """
-    lat = lineitem.select("l_orderkey", "l_shipdate").join(
-        orders.select("o_orderkey", "o_orderdate"),
-        F.col("l_orderkey") == F.col("o_orderkey"),
-    ).select(
-        F.expr(
-            "cast(datediff(cast(l_shipdate as date), cast(o_orderdate as date))"
-            " as decimal(38,0))"
-        ).alias("x")
-    )
-    s = lat.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").alias("s1"),
-        F.sum(F.expr("x * x")).alias("s2"),
-        F.sum(F.expr("x * x * x")).alias("s3"),
-        F.sum(F.expr("x * x * x * x")).alias("s4"),
-    )
-    mu = "(cast(s1 as double) / n)"
-    r2 = "(cast(s2 as double) / n)"
-    r3 = "(cast(s3 as double) / n)"
-    r4 = "(cast(s4 as double) / n)"
-    m2 = f"({r2} - {mu} * {mu})"
-    m3 = f"({r3} - 3 * {mu} * {r2} + 2 * {mu} * {mu} * {mu})"
-    m4 = (
-        f"({r4} - 4 * {mu} * {r3} + 6 * {mu} * {mu} * {r2}"
-        f" - 3 * {mu} * {mu} * {mu} * {mu})"
-    )
-    skew = f"({m3} / ({m2} * sqrt({m2})))"
-    kurt = f"({m4} / ({m2} * {m2}) - 3)"
-    jb = f"(n * ({skew} * {skew} / 6.0 + {kurt} * {kurt} / 24.0))"
-    return s.select(
-        "n",
-        round_det(F.expr(skew), 6).alias("skewness"),
-        round_det(F.expr(kurt), 6).alias("kurtosis_excess"),
-        round_det(F.expr(jb), 2).alias("jb_stat"),
-    )
-
-
 #: candidate periods (days) scanned by the revenue periodogram
 PERIODOGRAM_PERIODS = tuple(range(2, 15))
 #: day-index anchor for the periodogram phase (any fixed date works;

@@ -435,12 +435,6 @@ def unigram_logprob(documents: DataFrame) -> DataFrame:
     )
 
 
-def _grams_col(text_col: str, n: int) -> Column:
-    """ALL word n-grams (non-distinct, order-preserving) — the repetition
-    metrics need multiplicity, unlike hashing.shingles_col's distinct set."""
-    return _grams_from_tokens(H.tokens_col(text_col), n)
-
-
 def _grams_from_tokens(toks: Column | str, n: int) -> Column:
     """Non-distinct n-grams from a materialized token array column —
     same long-document rule as hashing.shingles_from_tokens (an inline

@@ -146,10 +146,11 @@ def run_full_pipeline(
     """RFM → scale → K-means → stats + sampled silhouette, with stage
     timings in the shape of the reference's report (main.rs:87-145).
 
-    ``model_path``: when given, the fitted scaler + centroids (and the
-    MLlib model in the distributed regime) are persisted there
-    (model_store.save_model) so predict mode can serve without a refit —
-    the reference refits from raw data per prediction (main.rs:44-52).
+    ``model_path``: when given, the fitted scaler + centroids, cluster
+    sizes and inertia are saved there as one ``model.json``
+    (model_store.save_model; no Spark job) so predict mode can serve
+    without a refit — the reference refits from raw data per prediction
+    (main.rs:44-52).
 
     ``driver_fit_threshold`` bounds the driver-side collect of the
     small-n fast path. 250k rows × (id + 3 doubles) is ~10 MB of raw
@@ -218,7 +219,6 @@ def run_full_pipeline(
             **{f"{c}_mean": float(mu[i]) for i, c in enumerate(FE.RFM_COLS)},
             **{f"{c}_std": float(sd[i]) for i, c in enumerate(FE.RFM_COLS)},
         }
-        mllib_model = None
         x = (raw - mu) / sd
         centroids, labels, inertia = _numpy_kmeans(x, k, max_iter, tol, seed)
         counts = np.bincount(labels, minlength=k)
@@ -255,7 +255,7 @@ def run_full_pipeline(
             ])
             # fit_kmeans applies the n >= k guard
             res = C.fit_kmeans(scaled, k=k, max_iter=max_iter, tol=tol, seed=seed, cols=ZCOLS)
-            centroids, inertia, mllib_model = res.centroids, res.inertia, res.model
+            centroids, inertia = res.centroids, res.inertia
             assigned = C.assign_nearest(scaled, tuple(tuple(c) for c in centroids), ZCOLS)
             sizes = [(r.cluster, r.size, r.pct) for r in C.cluster_sizes(assigned).collect()]
             timings["kmeans_fit"] = time.perf_counter() - t0
@@ -297,15 +297,19 @@ def run_full_pipeline(
             cols=FE.RFM_COLS,
             cluster_sizes=sizes,
             inertia=result.inertia,
-            mllib_model=mllib_model,
         )
     return result
 
 
 def _numpy_silhouette(x, labels) -> float:
     """Pairwise silhouette on the sampled matrix — same definition as
-    operators/metrics.silhouette_sample (degenerate cases → 0)."""
+    operators/metrics.silhouette_sample + silhouette_mean (degenerate
+    cases → 0; each point's score, then the mean, rounded to 4 dp with
+    round_det's floor(v·1e4 + 0.5)/1e4)."""
     import numpy as np
+
+    def round4(v):
+        return np.floor(v * 1e4 + 0.5) / 1e4
 
     n = len(x)
     if n == 0:
@@ -321,7 +325,7 @@ def _numpy_silhouette(x, labels) -> float:
         b = min(d[i][m].mean() for m in others if m.any())
         m = max(a, b)
         sil[i] = (b - a) / m if m > 0 else 0.0
-    return round(float(sil.mean()), 4)
+    return float(round4(round4(sil).mean()))
 
 
 def run_prediction(
@@ -337,15 +341,18 @@ def run_prediction(
     centroids.
 
     With a ``model_path`` holding a previously saved model, serving SKIPS
-    the refit entirely (``rfm`` may even be None) — k·d floats loaded
-    from parquet and a driver-side distance computation. Without one, the
-    reference's refit-from-raw behavior (main.rs:31-81) runs, and the fit
-    is saved to ``model_path`` if given (so the next predict is refit-free).
+    the refit entirely (``rfm`` may even be None) — k·d floats read from
+    one ``model.json`` and a driver-side distance computation, no Spark
+    job. Without one (``model_path`` does not exist), the reference's
+    refit-from-raw behavior (main.rs:31-81) runs, and the fit is saved to
+    ``model_path`` if given (so the next predict is refit-free). A
+    ``model_path`` that exists but holds no readable model raises rather
+    than being refitted over.
     """
-    from clusterforge_spark.model_store import load_model, model_exists
+    from clusterforge_spark.model_store import load_model
 
-    if model_path is not None and model_exists(spark, model_path):
-        m = load_model(spark, model_path)
+    m = load_model(spark, model_path) if model_path is not None else None
+    if m is not None:
         cluster, _dist = C.predict_point(
             m.scaler_params, tuple(tuple(c) for c in m.centroids), point, cols=m.cols
         )

@@ -33,10 +33,6 @@ def write_parquet(
     w.parquet(path)
 
 
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).option("header", True).csv(path)
-
-
 def write_bucketed(
     df: DataFrame,
     table: str,

@@ -3,12 +3,14 @@ oracle SQL validity on DuckDB."""
 
 from __future__ import annotations
 
+import os
+
 import duckdb
 import pytest
 
 import __spark_entry__ as E
 
-from tests.conftest import SF_DIR
+from tests.conftest import REPO_ROOT, SF_DIR
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -88,7 +90,7 @@ def test_survey_query_count_matches_contract():
     §8 still said 161)."""
     import re
 
-    text = open("/root/repo/SURVEY.md", encoding="utf-8").read()
+    text = open(os.path.join(REPO_ROOT, "SURVEY.md"), encoding="utf-8").read()
     m = re.search(r"the shipped contract is \*\*(\d+)\s*\nqueries\*\*", text)
     assert m, "SURVEY.md §8 no longer contains the pinned query-count phrase"
     assert int(m.group(1)) == len(E.queries())
@@ -102,7 +104,7 @@ def test_selfcheck_query_count_matches_contract():
     import glob
     import re
 
-    latest = sorted(glob.glob("/root/repo/SELFCHECK_r*.md"))[-1]
+    latest = sorted(glob.glob(os.path.join(REPO_ROOT, "SELFCHECK_r*.md")))[-1]
     text = open(latest, encoding="utf-8").read()
     m = re.search(r"\*\*(\d+) queries\*\*", text)
     assert m, f"{latest} no longer contains the pinned query-count phrase"

@@ -8,6 +8,7 @@ these tests pin the roundtrip contract.
 from __future__ import annotations
 
 import pytest
+from py4j.protocol import Py4JJavaError
 
 from clusterforge_spark import model_store as MS
 from clusterforge_spark.operators import clustering as C
@@ -23,19 +24,22 @@ def _rfm(spark):
 
 
 def test_save_load_roundtrip_numpy_regime(spark, tmp_path):
-    path = str(tmp_path / "model")
-    res = run_full_pipeline(spark, _rfm(spark), n_rows=-1, k=4, seed=42, model_path=path)
-    assert MS.model_exists(spark, path)
+    """Save → new session → load gives the fitted state exactly, from the
+    numpy fit branch (default threshold) and the distributed one (2)."""
+    for driver_fit_threshold in (250_000, 2):
+        path = str(tmp_path / f"model-{driver_fit_threshold}")
+        res = run_full_pipeline(spark, _rfm(spark), n_rows=-1, k=4, seed=42,
+                                driver_fit_threshold=driver_fit_threshold, model_path=path)
+        assert MS.model_exists(spark, path)
 
-    # a NEW session (fresh SQL state) must load the identical model
-    fresh = spark.newSession()
-    m = MS.load_model(fresh, path)
-    assert m.k == res.k
-    assert m.cols == FE.RFM_COLS
-    assert m.centroids == res.centroids
-    assert m.cluster_sizes == res.cluster_sizes
-    assert m.inertia == pytest.approx(res.inertia)
-    assert m.scaler_params == pytest.approx(res.scaler_params)
+        # a NEW session (fresh SQL state) must load the identical model
+        m = MS.load_model(spark.newSession(), path)
+        assert m.k == res.k
+        assert m.cols == FE.RFM_COLS
+        assert m.centroids == res.centroids
+        assert m.cluster_sizes == res.cluster_sizes
+        assert m.inertia == res.inertia
+        assert m.scaler_params == res.scaler_params
 
 
 def test_loaded_model_serves_identical_assignments(spark, tmp_path):
@@ -64,22 +68,6 @@ def test_predict_skips_refit_with_saved_model(spark, tmp_path):
     assert res2.n_customers == res1.n_customers
 
 
-def test_mllib_model_saved_in_distributed_regime(spark, tmp_path):
-    path = str(tmp_path / "model")
-    # force the distributed branch with a tiny driver_fit_threshold
-    res = run_full_pipeline(
-        spark, _rfm(spark), n_rows=-1, k=4, seed=42,
-        driver_fit_threshold=2, model_path=path,
-    )
-    m = MS.load_model(spark, path)
-    assert m.centroids == res.centroids
-    mllib = MS.load_mllib_model(spark, path)
-    got = [[float(v) for v in c] for c in mllib.clusterCenters()]
-    assert len(got) == len(res.centroids)
-    for g, want in zip(got, res.centroids):
-        assert g == pytest.approx(want)
-
-
 def test_distributed_branch_matches_operator_pipeline(spark):
     """The distributed branch's one-stats-job scaler, literal scaling and
     driver-side silhouette give what the public operators give."""
@@ -100,7 +88,7 @@ def test_distributed_branch_matches_operator_pipeline(spark):
     sil = M.silhouette_mean(
         M.silhouette_sample(assigned, id_col="user_id", cols=ZCOLS)
     ).collect()[0].mean_silhouette
-    assert res.silhouette == pytest.approx(sil, abs=2e-4)
+    assert res.silhouette == sil
 
 
 def _write_events(path: str, n_customers: int) -> None:
@@ -147,18 +135,35 @@ def test_distributed_branch_sees_rewritten_input_and_leaves_nothing_cached(spark
 
 
 def test_model_exists_is_false_only_for_a_missing_model(spark, tmp_path):
-    from pyspark.errors import AnalysisException
-
     assert not MS.model_exists(spark, str(tmp_path / "absent"))
-    corrupt = tmp_path / "corrupt"
-    (corrupt / "meta").mkdir(parents=True)
-    (corrupt / "meta" / "part-00000.parquet").write_bytes(b"not a parquet file")
-    with pytest.raises(Exception, match="(?i)parquet"):
-        MS.model_exists(spark, str(corrupt))
+    not_json = tmp_path / "not_json"
+    not_json.mkdir()
+    (not_json / "model.json").write_text('{"format_version": "2", "k": 4, "cen')
     empty = tmp_path / "empty"
-    (empty / "meta").mkdir(parents=True)
-    with pytest.raises(AnalysisException, match="UNABLE_TO_INFER_SCHEMA"):
-        MS.model_exists(spark, str(empty))
+    empty.mkdir()
+    v1 = tmp_path / "v1"  # the parquet layout of format 1
+    (v1 / "meta").mkdir(parents=True)
+    (v1 / "meta" / "part-00000.parquet").write_bytes(b"PAR1")
+    for corrupt in (not_json, empty, v1):
+        with pytest.raises(ValueError, match="not a format-2 model"):
+            MS.model_exists(spark, str(corrupt))
+    # a corrupt model is never silently refitted over
+    with pytest.raises(ValueError, match="not a format-2 model"):
+        run_prediction(spark, None, (30.0, 10.0, 500.0), model_path=str(not_json))
+
+    model = dict(centroids=[[0.0, 1.0, 2.0]], scaler_params={"recency_mean": 1.0},
+                 k=1, cols=("recency",))
+    saved = tmp_path / "saved"
+    MS.save_model(spark, str(saved), **model)
+    assert {p.name for p in saved.iterdir()} <= {"model.json", ".model.json.crc"}
+    assert (saved / "model.json").is_file()
+    # a save whose rename fails leaves no temp file behind
+    blocked = tmp_path / "blocked"
+    (blocked / "model.json").mkdir(parents=True)
+    (blocked / "model.json" / "keep").write_text("x")
+    with pytest.raises(Py4JJavaError):
+        MS.save_model(spark, str(blocked), **model)
+    assert [p.name for p in blocked.iterdir()] == ["model.json"]
 
 
 # ---------------------------------------------------------------------------

@@ -44,7 +44,7 @@ def test_numpy_silhouette_matches_distributed(spark, result):
     dist_sil = M.silhouette_mean(
         M.silhouette_sample(assigned, id_col="user_id")
     ).collect()[0].mean_silhouette
-    assert result.silhouette == pytest.approx(dist_sil, abs=2e-4)
+    assert result.silhouette == dist_sil
 
 
 def test_numpy_inertia_matches_distributed(spark, result):
