@@ -48,10 +48,10 @@ def source_bytes(df: DataFrame) -> int | None:
     file-footer metadata is free to read and is the same signal Spark's
     own statistics estimation starts from.
     """
+    files = df.inputFiles()
     try:
-        files = df.inputFiles()
         total = sum(os.path.getsize(urlparse(p).path or p) for p in files)
-    except Exception:
+    except OSError:  # not on the local file system (s3a://, hdfs://, …)
         return None
     return total if files else None
 

@@ -7,8 +7,12 @@ centroids, new-point literal) with the Spark operators so the two sides
 can never drift.
 
 Cross-engine float determinism rules (mirrored in the operators):
-  * money sums accumulate in DECIMAL(18,2) then cast back to double —
-    exact and order-independent;
+  * money sums accumulate exact integer cents, CAST(floor(x * 100 + 0.5)
+    AS BIGINT), then cast back to double and divide by 100.0 — exact and
+    order-independent; on 2-dp values the result equals an exact
+    DECIMAL(18,2) sum cast to double (the RFM features, the lineitem
+    queries). Some queries still sum DECIMAL(18,2), which agrees with
+    the cents rule on 2-dp values;
   * products/differences/sqrt of doubles are bit-identical IEEE ops, left
     unrounded;
   * anything downstream of avg/stddev (z-scores, distances, silhouette,
@@ -49,7 +53,7 @@ def rfm_cte(ref_instant: str = DEFAULT_REF_INSTANT) -> str:
          CAST(epoch_us(TIMESTAMP '{ref_instant}') - epoch_us(max(ts::TIMESTAMP)) AS DOUBLE)
            / 86400000000.0 AS recency,
          CAST(count(DISTINCT event_id) AS DOUBLE) AS frequency,
-         CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS monetary
+         CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0 AS monetary
   FROM events
   GROUP BY user_id
   HAVING recency >= 0 AND frequency > 0 AND monetary > 0

@@ -157,9 +157,11 @@ def run_full_pipeline(
     values but ~125 MB of CPython Row-object heap during the collect —
     comfortably inside a default driver while leaving headroom for the
     result holder; beyond it the pipeline switches to the distributed
-    MLlib branch: one stats job fills a cache of the RFM table and gives
-    n and the scaler, the silhouette is computed on the driver from the
-    bounded ``silhouette_n``-row sample, and nothing stays cached
+    MLlib branch: one stats job fills a cache of the RFM table (ordered
+    by key within each partition, so the seeded fit depends only on the
+    user_id hash layout) and gives n and the scaler, the silhouette is
+    computed on the driver from the bounded ``silhouette_n``-row sample,
+    and nothing stays cached
     (tests/test_persistence.py pins that branch). See SCALE.md for the
     derivation.
     """
@@ -233,7 +235,11 @@ def run_full_pipeline(
         sample_x, sample_labels = x[:silhouette_n], labels[:silhouette_n]  # key-sorted
     else:
         rows = []
-        # a cache the caller holds on the same plan is used and kept
+        # key-ordered within each partition: MLlib's seeded fit depends on
+        # row order, which then follows only the user_id hash layout, not
+        # the aggregate's internals. A cache the caller holds on the same
+        # plan is used and kept.
+        base = base.sortWithinPartitions("user_id")
         release = base.storageLevel == StorageLevel.NONE
         base = base.cache()
         try:

@@ -33,8 +33,132 @@ def test_rfm_matches_manual_aggregation(events, rfm):
     by_user = {r.user_id: r for r in rfm.collect()}
     for r in manual:
         assert by_user[r.user_id].frequency == float(r.f)
-        assert by_user[r.user_id].monetary == pytest.approx(r.m, abs=1e-9)
+        assert by_user[r.user_id].monetary == r.m
 
+
+
+def _write_money_events(path: str, values: list[tuple[int, float]]) -> None:
+    """One purchase event per (user_id, value), all before the RFM reference
+    instant, written by pyarrow as the driver's events table is."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n = len(values)
+    ts = np.datetime64("2024-06-01", "us") + np.arange(n) * 3_600_000_000
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(range(n), pa.int64()),
+            "ts": pa.array(ts, pa.timestamp("us")),
+            "user_id": pa.array([u for u, _ in values], pa.int64()),
+            "event_type": pa.array(["purchase"] * n),
+            "value": pa.array([v for _, v in values], pa.float64()),
+            "props": pa.array(["{}"] * n),
+        }),
+        path,
+    )
+
+
+def _rfm_of(spark, tmp_path, values):
+    from clusterforge_spark.operators.features import compute_rfm
+    from clusterforge_spark.sources.readers import load_table
+
+    _write_money_events(str(tmp_path / "events.parquet"), values)
+    events = load_table(spark, str(tmp_path), "events")
+    return events, compute_rfm(events)
+
+
+def _oracle_rfm(tmp_path) -> dict:
+    import duckdb
+
+    from clusterforge_spark.oracle_sql import q_rfm_features
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{tmp_path}/events.parquet')")
+    return {u: m for u, _, _, m in con.execute(q_rfm_features()).fetchall()}
+
+
+def test_rfm_cents_sum_equals_decimal_sum_on_2dp_edges(spark, tmp_path):
+    """2-dp amounts whose ×100 is inexact in double (0.29·100 =
+    28.999999999999996, …) give the exact decimal sum's double, alone
+    and summed per customer; the oracle agrees."""
+    edges = [0.29, 1.15, 4.35, 1e7 + 0.01, 92233720368.54]
+    values = [(i, v) for i, v in enumerate(edges)] + [(100, v) for v in edges]
+    events, rfm = _rfm_of(spark, tmp_path, values)
+    dec = {
+        r.user_id: r.m
+        for r in events.groupBy("user_id")
+        .agg(F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("m"))
+        .collect()
+    }
+    got = {r.user_id: r.monetary for r in rfm.collect()}
+    assert got == dec
+    assert [got[i] for i in range(len(edges))] == edges
+    assert _oracle_rfm(tmp_path) == got
+
+
+def test_rfm_3dp_amounts_follow_the_cents_rule(spark, tmp_path):
+    """Past 2 dp the rule is floor(v·100 + 0.5) on the doubles: 0.285·100
+    is 28.499999999999996, so 0.285 counts as 0.28 (a decimal cast of its
+    shortest repr gives 0.29), while 1.115·100 rounds to 111.5 and counts
+    as 1.12; Spark and the oracle agree."""
+    values = [(1, 1.115), (2, 0.285), (3, 1.115), (3, 0.285)]
+    _, rfm = _rfm_of(spark, tmp_path, values)
+    got = {r.user_id: r.monetary for r in rfm.collect()}
+
+    def cents(v):
+        return math.floor(v * 100 + 0.5)
+
+    assert got == {
+        1: cents(1.115) / 100.0,
+        2: cents(0.285) / 100.0,
+        3: (cents(1.115) + cents(0.285)) / 100.0,
+    }
+    assert (got[1], got[2]) == (1.12, 0.28)
+    assert _oracle_rfm(tmp_path) == got
+
+
+def test_rfm_money_sum_past_long_range_raises(spark, tmp_path):
+    """Two 5e16 amounts are 1e19 cents, past 2^63: the ANSI long sum raises
+    instead of wrapping."""
+    from pyspark.errors import ArithmeticException
+
+    _, rfm = _rfm_of(spark, tmp_path, [(1, 5e16), (1, 5e16), (2, 1.0)])
+    with pytest.raises(ArithmeticException, match="ARITHMETIC_OVERFLOW"):
+        rfm.collect()
+
+
+def test_compute_rfm_plan_one_exchange_no_wide_decimal(spark, tmp_path):
+    """One hash exchange on user_id carries the whole aggregate chain, and
+    no decimal(28,2) accumulator is left in the plan (a fresh file, so no
+    cached fixture stands in for the scan)."""
+    from clusterforge_spark.plans.explain import exchange_count, plan_string
+
+    _, rfm = _rfm_of(spark, tmp_path, [(1, 1.0), (1, 2.5), (2, 3.25)])
+    assert plan_string(rfm, "simple").count("Exchange hashpartitioning(user_id") == 1
+    assert exchange_count(rfm) == 1
+    # the JSON plan carries every attribute's type, the text forms do not
+    assert "decimal(28" not in rfm._jdf.queryExecution().executedPlan().toJSON()
+
+
+def test_rfm_scaler_bit_identical_with_aqe_on_and_off(spark, events):
+    """Over a non-file input (the cached events) the reducer count is the
+    session's shuffle-partition conf either way, so the scaler's double
+    sums run in the same order."""
+    from clusterforge_spark.operators.features import compute_rfm, fit_scaler
+
+    before = spark.conf.get("spark.sql.adaptive.enabled")
+    params = []
+    try:
+        for aqe in ("true", "false"):
+            spark.conf.set("spark.sql.adaptive.enabled", aqe)
+            # a reference instant of its own, so the cached `rfm` fixture
+            # cannot stand in for the plan
+            rfm = compute_rfm(events, ref_instant="2024-07-02 00:00:00")
+            params.append(fit_scaler(rfm).collect()[0].asDict())
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", before)
+    assert params[0] == params[1]
 
 def test_scaler_mean_zero_population_std(scaled):
     """Scaled columns have mean ≈ 0 (tol mirrors data.rs:284-295) and

@@ -70,12 +70,15 @@ def test_predict_skips_refit_with_saved_model(spark, tmp_path):
 
 def test_distributed_branch_matches_operator_pipeline(spark):
     """The distributed branch's one-stats-job scaler, literal scaling and
-    driver-side silhouette give what the public operators give."""
+    driver-side silhouette give what the public operators give on the
+    same rows in the branch's row order (key-ordered in each partition)."""
     from clusterforge_spark.operators import metrics as M
     from clusterforge_spark.pipeline import ZCOLS
 
     rfm = _rfm(spark)
     res = run_full_pipeline(spark, rfm, n_rows=-1, k=4, seed=42, driver_fit_threshold=2)
+    # cached, so the optimizer cannot drop the sort under scale_features' join
+    rfm = rfm.sortWithinPartitions("user_id").cache()
     assert res.scaler_params == FE.fit_scaler(rfm).collect()[0].asDict()
 
     scaled = FE.scale_features(rfm)
@@ -89,7 +92,24 @@ def test_distributed_branch_matches_operator_pipeline(spark):
         M.silhouette_sample(assigned, id_col="user_id", cols=ZCOLS)
     ).collect()[0].mean_silhouette
     assert res.silhouette == sil
+    rfm.unpersist()
 
+
+
+def test_distributed_fit_ignores_row_order_within_partitions(spark):
+    """The same RFM rows in the same user_id hash layout, ordered ascending
+    or descending inside each partition, give the same MLlib fit: the
+    distributed branch orders each partition by key before fitting."""
+    import pyspark.sql.functions as F
+
+    rfm = _rfm(spark).repartition(4, "user_id")
+    res = [
+        run_full_pipeline(spark, rfm.sortWithinPartitions(order), n_rows=-1, k=4, seed=42,
+                          driver_fit_threshold=2)
+        for order in (F.col("user_id").asc(), F.col("user_id").desc())
+    ]
+    assert res[0].centroids == res[1].centroids
+    assert res[0].cluster_sizes == res[1].cluster_sizes
 
 def _write_events(path: str, n_customers: int) -> None:
     import numpy as np

@@ -1069,3 +1069,19 @@ def test_banded_salted_plan_carries_salt_only_when_capped(spark, documents):
     for p in (plain, forced_plain):
         assert "_salt" not in p and "_probe" not in p and "_m#" not in p
     assert "_salt" in salted and "_probe" in salted
+
+
+def test_source_bytes_file_scan_and_non_file_input(spark, tmp_path):
+    """A non-file frame has no source size; a parquet table's is the sum
+    of its data files' sizes."""
+    import glob
+    import os
+
+    from clusterforge_spark.functions.partitioning import source_bytes
+
+    assert source_bytes(spark.range(3)) is None
+    path = str(tmp_path / "t")
+    spark.range(100).repartition(2).write.parquet(path)
+    files = glob.glob(os.path.join(path, "*.parquet"))
+    assert len(files) == 2
+    assert source_bytes(spark.read.parquet(path)) == sum(os.path.getsize(f) for f in files)
