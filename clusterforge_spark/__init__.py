@@ -39,7 +39,7 @@ from clusterforge_spark.operators import (
     validation,
 )
 from clusterforge_spark.sources import readers, sinks
-from clusterforge_spark.streaming import sessionize, sources as stream_sources
+from clusterforge_spark.streaming import sessionize
 from clusterforge_spark.cli import main as cli_main
 from clusterforge_spark.curation import run_curation_pipeline
 from clusterforge_spark.model_store import (
@@ -84,7 +84,6 @@ __all__ = [
     "sinks",
     # streaming
     "sessionize",
-    "stream_sources",
     # pipeline / serving / CLI
     "PipelineResult",
     "run_full_pipeline",

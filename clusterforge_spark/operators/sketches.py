@@ -44,7 +44,7 @@ def token_vocab_counts(documents: DataFrame, cache: bool = True) -> DataFrame:
     every sketch's identical sub-plan to one InMemoryRelation, exactly
     like the dedup family's shingle table. Pass ``cache=False`` for
     single-consumer callers with a DIFFERENT plan per call — the
-    streaming per-batch sketch build (run_stream_countmin_batchlike)
+    streaming per-batch sketch build (run_stream_countmin)
     would otherwise pin one never-deduped InMemoryRelation per
     micro-batch for the session lifetime.
     """

@@ -6759,7 +6759,7 @@ WHERE p.event_type = 'purchase' AND c.event_type = 'click'"""
 
 
 def q_stream_topk_replay(k: int = 3) -> str:
-    """Mirrors streaming.run_stream_topk_batchlike's converged sink:
+    """Mirrors streaming.run_stream_topk_replay's converged sink:
     per-hour top-k event types (count desc, type asc tie-break)."""
     return f"""WITH h AS (
   SELECT epoch_us(date_trunc('hour', ts::TIMESTAMP)) AS hour_start_us,
@@ -6810,7 +6810,7 @@ WHERE session_idx < (SELECT max(a2.session_idx) FROM agg a2
 
 
 def q_stream_upsert_replay() -> str:
-    """Mirrors streaming.run_stream_upsert_batchlike's converged
+    """Mirrors streaming.run_stream_upsert_replay's converged
     snapshot: per-user last-write-wins view ((user_id, ts) is unique in
     the feed, so arg_max is well-defined)."""
     return """SELECT user_id,

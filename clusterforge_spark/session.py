@@ -135,15 +135,18 @@ def get_spark(
 ) -> SparkSession:
     """Build (or get) a SparkSession tuned for this engine.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    for the test/bench environment; on a real cluster, pass ``None`` and
-    launch through ``spark-submit`` so the cluster manager decides.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` and
+    ``shuffle_partitions`` to ``$SPARK_GRAFT_SHUFFLE``; each env var,
+    when unset, defaults to the number of cores this process may run on
+    (``os.sched_getaffinity``), so a local run never schedules more
+    concurrent tasks than the host has cores. On a real cluster, pass
+    the cluster's ``master`` explicitly.
     """
+    cores = str(len(os.sched_getaffinity(0)))
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
+        master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', cores)}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", cores))
 
     builder = (
         SparkSession.builder.appName(app_name)

@@ -8,9 +8,12 @@ README.md:320); this is the designed-for-scale upgrade (SURVEY.md §7
 phase E): at 100 TB/day the same code runs against Kafka by swapping the
 source.
 
-Batch/stream parity is tested by running this on the events parquet via
-the file source with ``availableNow`` and comparing to the batch
-operator (tests/test_streaming.py).
+Every finite stream runs to completion through one harness: the
+``availableNow`` foreachBatch parquet capture,
+:func:`run_stream_replay_to_parquet` (or, for the stateful sinks below,
+its own foreachBatch body through the same :func:`_start_and_await`).
+The q_stream_*_replay contract queries and the batch/stream parity tests
+(tests/test_streaming.py) read the same capture.
 """
 
 from __future__ import annotations
@@ -31,8 +34,8 @@ from clusterforge_spark.sources.readers import (
 
 def _await_or_raise(query, timeout_s: int) -> None:
     """awaitTermination returns False on timeout — a silent partial
-    memory table would make parity tests fail confusingly (or pass
-    against wrong data in complete mode). Stop the query and raise."""
+    capture would make parity tests fail confusingly (or pass against
+    wrong data in complete mode). Stop the query and raise."""
     if not query.awaitTermination(timeout_s):
         query.stop()
         raise TimeoutError(
@@ -65,10 +68,13 @@ def _scratch_root() -> str:
     return os.path.join(tempfile.gettempdir(), "clusterforge_rt")
 
 
-def _start_and_await(writer, timeout_s: int, state_partitions: int | None = None):
+def _start_and_await(writer, timeout_s: int = 180):
     """Start a fully-configured ``DataStreamWriter`` with a FRESH
     scratch checkpoint dir, run it to completion, delete the
-    checkpoint, and return the (terminated) query.
+    checkpoint, and return the (terminated) query. Every finite stream
+    in the package starts here; a query that fails or times out raises,
+    and the session conf and checkpoint are restored/removed on both
+    paths (tests/test_streaming.py pins all three).
 
     Every replay gets its own never-reused checkpoint: resuming an
     availableNow replay from a previous run's checkpoint would skip the
@@ -94,12 +100,7 @@ def _start_and_await(writer, timeout_s: int, state_partitions: int | None = None
 
     df = getattr(writer, "_df", None)
     spark = df.sparkSession if df is not None else None
-    # precedence: explicit env (the deployment's sizing) > caller's
-    # measured per-shape default > the family default 8
-    stream_parts = os.environ.get(
-        "SPARK_GRAFT_STREAM_SHUFFLE",
-        str(state_partitions) if state_partitions else "8",
-    )
+    stream_parts = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8")
     saved = None
     ck = os.path.join(_scratch_root(), "ckpt", uuid.uuid4().hex)
     try:
@@ -160,27 +161,6 @@ def hourly_user_counts(events_stream: DataFrame, watermark: str = "2 hours") -> 
     )
 
 
-def run_sessionize_batchlike(
-    spark: SparkSession, sf_dir: str, timeout_s: int = 120
-) -> DataFrame:
-    """Run the streaming aggregation to completion over the static
-    parquet (availableNow trigger + memory sink) and return the result
-    as a batch DataFrame — used by tests to prove stream/batch parity.
-    """
-    stream = hourly_user_counts(read_events_stream(spark, sf_dir))
-    # complete mode: append would hold back windows the final watermark
-    # hasn't passed (everything within 2h of max ts) — for a finite file
-    # replay we want every window emitted.
-    query = _start_and_await(
-        stream.writeStream.format("memory")
-        .queryName("sessionize_out")
-        .outputMode("complete")
-        .trigger(availableNow=True),
-        timeout_s,
-    )
-    return spark.table("sessionize_out")
-
-
 # ---------------------------------------------------------------------------
 # stateful gap sessionization (applyInPandasWithState)
 # ---------------------------------------------------------------------------
@@ -190,37 +170,6 @@ SESSION_OUTPUT_SCHEMA = (
     "n_events long, session_value double"
 )
 SESSION_STATE_SCHEMA = "start_us long, end_us long, n_events long, value double"
-
-
-def _fold_session_chunks(user_id, chunks, state_tuple, gap_us):
-    """The gap-session fold shared by BOTH stateful APIs (v1
-    applyInPandasWithState and v2 transformWithStateInPandas): global
-    event-time sort of the trigger's chunks, then the close-on-gap scan.
-    Returns (closed_sessions, new_state_tuple)."""
-    import pandas as pd
-
-    start_us, end_us, n_events, value = state_tuple
-    closed = []
-    if chunks:
-        pdf = (
-            pd.concat(chunks).sort_values("ts_us")
-            if len(chunks) > 1
-            else chunks[0].sort_values("ts_us")
-        )
-        for ts_us, v in zip(pdf["ts_us"], pdf["value"]):
-            ts_us = int(ts_us)
-            if start_us is None:
-                start_us, end_us, n_events, value = ts_us, ts_us, 1, float(v)
-            elif ts_us - end_us > gap_us:
-                closed.append((user_id, start_us, end_us, n_events, round(value, 2)))
-                start_us, end_us, n_events, value = ts_us, ts_us, 1, float(v)
-            else:
-                end_us = ts_us
-                n_events += 1
-                value += float(v)
-    return closed, (start_us, end_us, n_events, value)
-
-
 _SESSION_OUT_COLS = [
     "user_id", "session_start_us", "session_end_us", "n_events", "session_value"
 ]
@@ -255,9 +204,29 @@ def sessionize_gap_stream(
         import pandas as pd
 
         (user_id,) = key
-        prev = state.get if state.exists else (None, None, 0, 0.0)
-        closed, new_state = _fold_session_chunks(user_id, list(pdf_iter), prev, gap_us)
-        state.update(new_state)
+        start_us, end_us, n_events, value = (
+            state.get if state.exists else (None, None, 0, 0.0)
+        )
+        closed = []
+        chunks = list(pdf_iter)
+        if chunks:
+            pdf = (pd.concat(chunks) if len(chunks) > 1 else chunks[0]).sort_values(
+                "ts_us"
+            )
+            for ts_us, v in zip(pdf["ts_us"], pdf["value"]):
+                ts_us = int(ts_us)
+                if start_us is None:
+                    start_us, end_us, n_events, value = ts_us, ts_us, 1, float(v)
+                elif ts_us - end_us > gap_us:
+                    closed.append(
+                        (user_id, start_us, end_us, n_events, round(value, 2))
+                    )
+                    start_us, end_us, n_events, value = ts_us, ts_us, 1, float(v)
+                else:
+                    end_us = ts_us
+                    n_events += 1
+                    value += float(v)
+        state.update((start_us, end_us, n_events, value))
         if closed:
             yield pd.DataFrame(closed, columns=_SESSION_OUT_COLS)
 
@@ -271,95 +240,6 @@ def sessionize_gap_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def sessionize_gap_stream_v2(
-    events_stream: DataFrame, gap_minutes: int = 30
-) -> DataFrame:
-    """The gap sessionizer on Spark 4's arbitrary-state v2 API
-    (``transformWithStateInPandas`` + ``StatefulProcessor``).
-
-    Shares :func:`_fold_session_chunks` with the v1 operator, so the two
-    APIs cannot drift; the v2 shell adds typed state handles, timers, and
-    (operationally) requires the RocksDB state-store provider — the
-    configuration a 100 TB deployment runs anyway for state larger than
-    executor heap.
-
-    Environment note: the v2 worker protocol needs the ``protobuf``
-    package (``google.protobuf``), which this container does not ship —
-    the parity test skips when it is missing (like the multimodal codec
-    stub, the Spark-side plumbing is real and the shared fold is fully
-    exercised through the v1 path).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    gap_us = gap_minutes * 60_000_000
-
-    class GapSessionProcessor(StatefulProcessor):
-        def init(self, handle: "StatefulProcessorHandle") -> None:
-            self._state = handle.getValueState("open_session", SESSION_STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timer_values):
-            import pandas as pd
-
-            (user_id,) = key
-            prev = self._state.get() if self._state.exists() else (None, None, 0, 0.0)
-            closed, new_state = _fold_session_chunks(user_id, list(rows), prev, gap_us)
-            self._state.update(new_state)
-            if closed:
-                yield pd.DataFrame(closed, columns=_SESSION_OUT_COLS)
-
-        def close(self) -> None:
-            pass
-
-    prepared = events_stream.select(
-        "user_id", F.unix_micros("ts").alias("ts_us"), "value"
-    )
-    return prepared.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=GapSessionProcessor(),
-        outputStructType=SESSION_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-    )
-
-
-def run_gap_sessions_v2_batchlike(
-    spark: SparkSession, sf_dir: str, gap_minutes: int = 30, timeout_s: int = 120
-) -> DataFrame:
-    """Replay the events file through the v2 stateful sessionizer
-    (sets the RocksDB state-store provider the v2 API requires)."""
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    stream = sessionize_gap_stream_v2(read_events_stream(spark, sf_dir), gap_minutes)
-    query = _start_and_await(
-        stream.writeStream.format("memory")
-        .queryName("gap_sessions_v2_out")
-        .outputMode("append")
-        .trigger(availableNow=True),
-        timeout_s,
-    )
-    return spark.table("gap_sessions_v2_out")
-
-
-def run_gap_sessions_batchlike(
-    spark: SparkSession, sf_dir: str, gap_minutes: int = 30, timeout_s: int = 120
-) -> DataFrame:
-    """Replay the events file through the stateful sessionizer; returns
-    the emitted (closed) sessions as a batch DataFrame."""
-    stream = sessionize_gap_stream(read_events_stream(spark, sf_dir), gap_minutes)
-    query = _start_and_await(
-        stream.writeStream.format("memory")
-        .queryName("gap_sessions_out")
-        .outputMode("append")
-        .trigger(availableNow=True),
-        timeout_s,
-    )
-    return spark.table("gap_sessions_out")
 
 
 # ---------------------------------------------------------------------------
@@ -384,20 +264,6 @@ def dedup_events_stream(events_stream: DataFrame, watermark: str = "2 hours") ->
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "user_id", "value")
     )
-
-
-def run_dedup_stream_batchlike(
-    spark: SparkSession, sf_dir: str, timeout_s: int = 120
-) -> DataFrame:
-    stream = dedup_events_stream(read_events_stream(spark, sf_dir))
-    query = _start_and_await(
-        stream.writeStream.format("memory")
-        .queryName("dedup_stream_out")
-        .outputMode("append")
-        .trigger(availableNow=True),
-        timeout_s,
-    )
-    return spark.table("dedup_stream_out")
 
 
 # ---------------------------------------------------------------------------
@@ -461,35 +327,6 @@ def click_purchase_join_stream(
     )
 
 
-def run_click_attribution_batchlike(
-    spark: SparkSession, sf_dir: str, max_gap_minutes: int = 60, timeout_s: int = 180
-) -> DataFrame:
-    """Replay the events file through the stream-stream join (two
-    independent file sources, as a real deployment would read two
-    topics) and return the emitted matches."""
-    stream = click_purchase_join_stream(
-        read_events_stream(spark, sf_dir),
-        read_events_stream(spark, sf_dir),
-        max_gap_minutes=max_gap_minutes,
-    )
-    # 4 state partitions, not the family's 8: the stream-stream join
-    # keeps TWO keyed state stores per partition per side, and this
-    # replay runs 2 micro-batches — per-partition store open/commit is
-    # its dominant cost at replay state sizes (interleaved ABAB at
-    # sf0.1: 2.46-2.54 s at 4 vs 3.1-5.1 s at 8, r13). A deployment
-    # overrides via SPARK_GRAFT_STREAM_SHUFFLE, sized to join-key
-    # cardinality.
-    query = _start_and_await(
-        stream.writeStream.format("memory")
-        .queryName("click_attribution_out")
-        .outputMode("append")
-        .trigger(availableNow=True),
-        timeout_s,
-        state_partitions=4,
-    )
-    return spark.table("click_attribution_out")
-
-
 # ---------------------------------------------------------------------------
 # native session-window aggregation (streaming form of
 # operators/relational.session_window_agg)
@@ -526,23 +363,6 @@ def session_window_counts_stream(
     )
 
 
-def run_session_window_batchlike(
-    spark: SparkSession, sf_dir: str, gap_minutes: int = 30, timeout_s: int = 180
-) -> DataFrame:
-    """Replay the events file through the native session-window stream
-    (complete mode: a finite replay must emit the final watermark-held
-    sessions too)."""
-    stream = session_window_counts_stream(read_events_stream(spark, sf_dir), gap_minutes)
-    query = _start_and_await(
-        stream.writeStream.format("memory")
-        .queryName("session_window_out")
-        .outputMode("complete")
-        .trigger(availableNow=True),
-        timeout_s,
-    )
-    return spark.table("session_window_out")
-
-
 # ---------------------------------------------------------------------------
 # foreachBatch sink: stream → partitioned parquet with exactly-once-per-batch
 # ---------------------------------------------------------------------------
@@ -573,7 +393,7 @@ def run_stream_to_partitioned_parquet(
             .parquet(out_path)
         )
 
-    query = _start_and_await(
+    _start_and_await(
         stream.writeStream.foreachBatch(write_batch)
         .outputMode("complete")
         .trigger(availableNow=True),
@@ -602,14 +422,12 @@ def hourly_event_type_counts(
     )
 
 
-def run_stream_topk_batchlike(
-    spark: SparkSession,
-    sf_dir: str,
-    out_path: str,
-    k: int = 3,
-    timeout_s: int = 180,
+def run_stream_topk_replay(
+    spark: SparkSession, sf_dir: str, k: int = 3, out_path: str | None = None
 ) -> DataFrame:
-    """Streaming top-k: per hour, the k most frequent event types.
+    """Streaming top-k: per hour, the k most frequent event types,
+    replayed to its parquet sink. Oracle: windowed count + row_number in
+    SQL (oracle_sql.q_stream_topk_replay).
 
     Ranking is not an incremental streaming operator (a late row can
     demote a current top-k member), so the scalable shape is: keep the
@@ -618,6 +436,7 @@ def run_stream_topk_batchlike(
     the rank runs only over the (already tiny) aggregate, never the raw
     stream. Complete mode + idempotent overwrite makes the sink converge
     to the exact batch answer on replay."""
+    out_path = _replay_out_dir(out_path, "topk", spark, sf_dir)
     counts = hourly_event_type_counts(read_events_stream(spark, sf_dir))
 
     def write_topk(batch_df: DataFrame, batch_id: int) -> None:
@@ -631,11 +450,10 @@ def run_stream_topk_batchlike(
             .parquet(out_path)
         )
 
-    query = _start_and_await(
+    _start_and_await(
         counts.writeStream.foreachBatch(write_topk)
         .outputMode("complete")
-        .trigger(availableNow=True),
-        timeout_s,
+        .trigger(availableNow=True)
     )
     return spark.read.parquet(out_path)
 
@@ -644,14 +462,12 @@ def run_stream_topk_batchlike(
 # streaming CDC apply (foreachBatch upsert into a keyed parquet snapshot)
 # ---------------------------------------------------------------------------
 
-def run_stream_upsert_batchlike(
-    spark: SparkSession,
-    sf_dir: str,
-    base_path: str,
-    timeout_s: int = 180,
+def run_stream_upsert_replay(
+    spark: SparkSession, sf_dir: str, out_path: str | None = None
 ) -> DataFrame:
     """Apply a stream of per-user updates onto a keyed parquet snapshot —
-    the streaming MERGE pattern on plain parquet.
+    the streaming MERGE pattern on plain parquet — replayed to
+    completion.
 
     Each micro-batch reduces to one row per key (last event wins by
     event time — max_by inside the batch), then merges into the snapshot
@@ -659,8 +475,13 @@ def run_stream_upsert_batchlike(
     operator. The rewrite cost is the snapshot, not the stream volume;
     on a table format with row-level merge (Delta/Iceberg) the same
     foreachBatch body becomes MERGE INTO. Replay converges to the batch
-    answer (idempotent per-key last-write-wins).
+    per-user last-event view (idempotent per-key last-write-wins;
+    oracle_sql.q_stream_upsert_replay); (user_id, ts) is unique in the
+    feed at every SF, so last_value is well-defined. An explicit
+    ``out_path`` is used as-is, so a second replay onto an existing
+    snapshot merges into it.
     """
+    base_path = _replay_out_dir(out_path, "upsert", spark, sf_dir)
     events = read_events_stream(spark, sf_dir)
     updates = events.select(
         "user_id", F.unix_micros("ts").alias("ts_us"), "value"
@@ -712,11 +533,10 @@ def run_stream_upsert_batchlike(
         staged = out.localCheckpoint(eager=True)
         staged.write.mode("overwrite").parquet(base_path)
 
-    query = _start_and_await(
+    _start_and_await(
         updates.writeStream.foreachBatch(apply_batch)
         .outputMode("append")
-        .trigger(availableNow=True),
-        timeout_s,
+        .trigger(availableNow=True)
     )
     return spark.read.parquet(base_path)
 
@@ -764,7 +584,7 @@ def run_stream_ingest_with_maintenance(
             compact_small_files(spark, out_path, target_bytes=target_bytes)
             n_compactions[0] += 1
 
-    query = _start_and_await(
+    _start_and_await(
         raw.writeStream.foreachBatch(land)
         .trigger(availableNow=True),
         timeout_s,
@@ -778,7 +598,7 @@ def run_stream_ingest_with_maintenance(
 # streaming SCD2 apply (incremental dimension-history maintenance)
 # ---------------------------------------------------------------------------
 
-def run_stream_scd2_batchlike(
+def run_stream_scd2_apply(
     spark: SparkSession,
     feed_dir: str,
     out_path: str,
@@ -834,7 +654,7 @@ def run_stream_scd2_batchlike(
             out = scd2_build(batch)
         out.localCheckpoint(eager=True).write.mode("overwrite").parquet(out_path)
 
-    query = _start_and_await(
+    _start_and_await(
         raw.writeStream.foreachBatch(apply_batch)
         .trigger(availableNow=True),
         timeout_s,
@@ -898,28 +718,6 @@ def ewma_stream(events_stream: DataFrame, alpha: float | None = None) -> DataFra
         stateStructType="ewma double, n_events long",
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def run_ewma_stream_batchlike(
-    spark: SparkSession, sf_dir: str, timeout_s: int = 180
-) -> DataFrame:
-    """availableNow replay of the events file through the stateful EWMA;
-    returns the final per-user snapshot."""
-    out = ewma_stream(read_events_stream(spark, sf_dir))
-    name = "ewma_stream_result"
-    query = _start_and_await(
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True),
-        timeout_s,
-    )
-    snap = spark.table(name)
-    # keep the last snapshot per user (multi-trigger replays emit several)
-    return snap.groupBy("user_id").agg(
-        F.max("n_events").cast("long").alias("n_events"),
-        F.max_by("ewma", "n_events").alias("ewma"),
     )
 
 
@@ -1020,27 +818,11 @@ def stream_curated_ingest(
     return stream_quality_filter(deduped, quality_min)
 
 
-def run_quality_filter_batchlike(
-    spark: SparkSession, sf_dir: str, timeout_s: int = 120
-) -> DataFrame:
-    """Drive the streaming quality filter over the documents file with
-    availableNow and return the complete result (parity-test harness)."""
-    out = stream_quality_filter(read_documents_stream(spark, sf_dir))
-    q = _start_and_await(
-        out.writeStream.format("memory")
-        .queryName("q_stream_quality")
-        .outputMode("append")
-        .trigger(availableNow=True),
-        timeout_s,
-    )
-    return spark.table("q_stream_quality")
-
-
 # ---------------------------------------------------------------------------
 # incrementally maintained Count-Min sketch (mergeable-state streaming)
 # ---------------------------------------------------------------------------
 
-def run_stream_countmin_batchlike(
+def run_stream_countmin(
     spark: SparkSession,
     docs_path_glob: str,
     sketch_path: str,
@@ -1058,7 +840,7 @@ def run_stream_countmin_batchlike(
     pinned by the multi-batch parity pytest. Replays of a batch are NOT
     idempotent on plain parquet (counts would double); production runs
     put batch_id-keyed dedup or a transactional table format underneath,
-    exactly as the docstring of run_stream_upsert_batchlike notes.
+    exactly as the docstring of run_stream_upsert_replay notes.
     """
     from clusterforge_spark.operators.sketches import (
         countmin_build,
@@ -1103,7 +885,7 @@ def run_stream_countmin_batchlike(
         staged = merged.localCheckpoint(eager=True)
         staged.write.mode("overwrite").parquet(sketch_path)
 
-    query = _start_and_await(
+    _start_and_await(
         docs.writeStream.foreachBatch(apply_batch)
         .outputMode("append")
         .trigger(availableNow=True),
@@ -1132,7 +914,7 @@ def _psi_buckets(df: DataFrame) -> DataFrame:
     )
 
 
-def run_stream_psi_batchlike(
+def run_stream_psi(
     spark: SparkSession,
     sf_dir: str,
     log_path: str,
@@ -1184,7 +966,7 @@ def run_stream_psi_batchlike(
         )
         row.write.mode("append").parquet(log_path)
 
-    query = _start_and_await(
+    _start_and_await(
         events.writeStream.foreachBatch(apply_batch)
         .outputMode("append")
         .trigger(availableNow=True),
@@ -1197,15 +979,17 @@ def run_stream_psi_batchlike(
 # replay capture: foreachBatch → parquet, the oracle surface of the
 # streaming family (r7)
 #
-# Each run_stream_*_replay routes its stream through a foreachBatch
-# parquet capture (the production sink shape — NOT the memory sink the
-# parity pytests use) and returns the read-back final table. On the
-# driver's single-file replay (availableNow, one micro-batch) every
-# capture below is deterministic and its final state is recomputable in
-# ANSI SQL over the same events parquet — so each one carries a DuckDB
-# oracle in oracle_sql.py and a q_stream_*_replay contract entry,
-# upgrading the streaming family from pytest-parity-only to
-# CORRECTNESS-gated. Ordering caveats (multi-trigger folds need
+# run_stream_replay_to_parquet is the one harness that runs a finite
+# stream to completion: a foreachBatch parquet capture (the production
+# sink shape) whose read-back final table is returned. The
+# run_stream_*_replay functions below route their operator through it
+# (topk and upsert, defined with their operators above, write their own
+# foreachBatch sink), and the batch/stream parity pytests read the same
+# capture. On the contract's single-file replay (availableNow, one
+# micro-batch) every capture is deterministic and its final state is
+# recomputable in ANSI SQL over the same events parquet — so each one
+# carries a DuckDB oracle in oracle_sql.py and a q_stream_*_replay
+# contract entry. Ordering caveats (multi-trigger folds need
 # event-time-ordered arrival) are unchanged from the underlying
 # operators' docstrings.
 # ---------------------------------------------------------------------------
@@ -1348,7 +1132,7 @@ def run_stream_replay_to_parquet(
         else:
             batch_df.write.mode(mode).parquet(out_path)
 
-    query = _start_and_await(
+    _start_and_await(
         stream.writeStream.foreachBatch(capture)
         .outputMode(output_mode)
         .trigger(availableNow=True),
@@ -1545,29 +1329,6 @@ def run_stream_click_attribution_replay(
     )
     return run_stream_replay_to_parquet(
         spark, stream, _replay_out_dir(out_path, "clickattr", spark, sf_dir), "append"
-    )
-
-
-def run_stream_topk_replay(
-    spark: SparkSession, sf_dir: str, k: int = 3, out_path: str | None = None
-) -> DataFrame:
-    """Streaming hourly top-k event types (the foreachBatch-ranked
-    pattern of run_stream_topk_batchlike), replayed to its parquet
-    sink. Oracle: windowed count + row_number in SQL."""
-    return run_stream_topk_batchlike(
-        spark, sf_dir, _replay_out_dir(out_path, "topk", spark, sf_dir), k=k
-    )
-
-
-def run_stream_upsert_replay(
-    spark: SparkSession, sf_dir: str, out_path: str | None = None
-) -> DataFrame:
-    """Streaming MERGE (last-write-wins per user) applied onto a parquet
-    snapshot, replayed to completion. Converges to the batch per-user
-    last-event view (oracle_sql.q_stream_upsert_replay); (user_id, ts)
-    is unique in the feed at every SF, so last_value is well-defined."""
-    return run_stream_upsert_batchlike(
-        spark, sf_dir, _replay_out_dir(out_path, "upsert", spark, sf_dir)
     )
 
 

@@ -5,15 +5,21 @@ from __future__ import annotations
 import pytest
 
 from clusterforge_spark.operators.relational import window_sessionize
-from clusterforge_spark.streaming.sessionize import run_sessionize_batchlike
+from clusterforge_spark.streaming.sessionize import (
+    read_events_stream,
+    run_stream_hourly_replay,
+    run_stream_replay_to_parquet,
+)
 
 from tests.conftest import SF_DIR
 
 
-def test_stream_matches_batch(spark, events):
+def test_stream_matches_batch(spark, events, tmp_path):
     stream_rows = {
         (r.user_id, r.hour_start_us): (r.events_in_hour, r.value_in_hour)
-        for r in run_sessionize_batchlike(spark, SF_DIR).collect()
+        for r in run_stream_hourly_replay(
+            spark, SF_DIR, out_path=str(tmp_path / "hourly")
+        ).collect()
     }
     batch_rows = {
         (r.user_id, r.hour_start_us): (r.events_in_hour, r.value_in_hour)
@@ -23,17 +29,23 @@ def test_stream_matches_batch(spark, events):
     assert len(stream_rows) > 0
 
 
-def test_stateful_gap_sessions_match_batch(spark, events):
+def test_stateful_gap_sessions_match_batch(spark, events, tmp_path):
     """Closed sessions from the stateful stream == batch sessions minus
-    each user's final (still-open) session."""
-    import pyspark.sql.functions as F
-
+    each user's final (still-open) session. Captured through the raw
+    harness, not run_stream_gap_sessions_replay, because that function
+    drops the float session_value this test also compares."""
     from clusterforge_spark.operators.relational import sessionize_gap
-    from clusterforge_spark.streaming.sessionize import run_gap_sessions_batchlike
+    from clusterforge_spark.streaming.sessionize import sessionize_gap_stream
 
+    captured = run_stream_replay_to_parquet(
+        spark,
+        sessionize_gap_stream(read_events_stream(spark, SF_DIR)),
+        str(tmp_path / "gap"),
+        "append",
+    )
     stream_rows = {
         (r.user_id, r.session_start_us): (r.session_end_us, r.n_events, r.session_value)
-        for r in run_gap_sessions_batchlike(spark, SF_DIR).collect()
+        for r in captured.collect()
     }
     batch = sessionize_gap(events).collect()
     last_idx = {}
@@ -48,10 +60,15 @@ def test_stateful_gap_sessions_match_batch(spark, events):
     assert stream_rows == closed_batch
 
 
-def test_streaming_dedup_matches_batch_distinct(spark, events):
-    from clusterforge_spark.streaming.sessionize import run_dedup_stream_batchlike
+def test_streaming_dedup_matches_batch_distinct(spark, events, tmp_path):
+    from clusterforge_spark.streaming.sessionize import dedup_events_stream
 
-    out = run_dedup_stream_batchlike(spark, SF_DIR)
+    out = run_stream_replay_to_parquet(
+        spark,
+        dedup_events_stream(read_events_stream(spark, SF_DIR)),
+        str(tmp_path / "dedup"),
+        "append",
+    )
     stream_ids = {r.event_id for r in out.collect()}
     batch_ids = {r.event_id for r in events.select("event_id").distinct().collect()}
     assert stream_ids == batch_ids
@@ -99,45 +116,20 @@ def test_windowed_agg_on_rate_source(spark):
         q.stop()
 
 
-def test_gap_sessions_v2_matches_v1(spark):
-    """transformWithStateInPandas (v2) emits the same closed sessions as
-    applyInPandasWithState on the same replay. The v2 worker protocol
-    needs protobuf, absent in this container - skip there (the shared
-    fold is covered through the v1 path either way)."""
-    import pytest
-
-    pytest.importorskip("google.protobuf")
-    from clusterforge_spark.streaming.sessionize import (
-        run_gap_sessions_batchlike,
-        run_gap_sessions_v2_batchlike,
-    )
-
-    from tests.conftest import SF_DIR
-
-    v1 = {
-        (r.user_id, r.session_start_us, r.session_end_us, r.n_events, r.session_value)
-        for r in run_gap_sessions_batchlike(spark, SF_DIR).collect()
-    }
-    v2 = {
-        (r.user_id, r.session_start_us, r.session_end_us, r.n_events, r.session_value)
-        for r in run_gap_sessions_v2_batchlike(spark, SF_DIR).collect()
-    }
-    assert v2 == v1
-    assert len(v2) > 0
-
-
-def test_stream_stream_join_matches_batch(spark, events):
+def test_stream_stream_join_matches_batch(spark, events, tmp_path):
     """Watermarked stream-stream interval join emits exactly the batch
     join's matches (finite replay, watermark far below the data span)."""
     import pyspark.sql.functions as F
 
     from clusterforge_spark.streaming.sessionize import (
-        run_click_attribution_batchlike,
+        run_stream_click_attribution_replay,
     )
 
     stream_rows = {
         (r.purchase_id, r.click_id)
-        for r in run_click_attribution_batchlike(spark, SF_DIR).collect()
+        for r in run_stream_click_attribution_replay(
+            spark, SF_DIR, out_path=str(tmp_path / "click")
+        ).collect()
     }
     c = events.filter(F.col("event_type") == "click").select(
         F.col("user_id").alias("c_user"),
@@ -162,13 +154,17 @@ def test_stream_stream_join_matches_batch(spark, events):
     assert len(stream_rows) > 0
 
 
-def test_native_session_window_stream_matches_batch(spark, events):
+def test_native_session_window_stream_matches_batch(spark, events, tmp_path):
     from clusterforge_spark.operators.relational import session_window_agg
-    from clusterforge_spark.streaming.sessionize import run_session_window_batchlike
+    from clusterforge_spark.streaming.sessionize import (
+        run_stream_session_window_replay,
+    )
 
     stream_rows = {
         (r.user_id, r.session_start_us): (r.session_end_us, r.n_events, r.session_value)
-        for r in run_session_window_batchlike(spark, SF_DIR).collect()
+        for r in run_stream_session_window_replay(
+            spark, SF_DIR, out_path=str(tmp_path / "sesswin")
+        ).collect()
     }
     batch_rows = {
         (r.user_id, r.session_start_us): (r.session_end_us, r.n_events, r.session_value)
@@ -214,13 +210,13 @@ def test_stream_topk_matches_batch(spark, events, tmp_path):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from clusterforge_spark.streaming.sessionize import run_stream_topk_batchlike
+    from clusterforge_spark.streaming.sessionize import run_stream_topk_replay
 
     k = 3
     got = {
         (r.hour_start_us, r.rank): (r.event_type, r.n_events)
-        for r in run_stream_topk_batchlike(
-            spark, SF_DIR, str(tmp_path / "topk"), k=k
+        for r in run_stream_topk_replay(
+            spark, SF_DIR, k=k, out_path=str(tmp_path / "topk")
         ).collect()
     }
     w = Window.partitionBy("hour_start_us").orderBy(
@@ -249,12 +245,12 @@ def test_stream_cdc_apply_matches_batch(spark, events, tmp_path):
     unchanged, update counts accumulate)."""
     from pyspark.sql import functions as F
 
-    from clusterforge_spark.streaming.sessionize import run_stream_upsert_batchlike
+    from clusterforge_spark.streaming.sessionize import run_stream_upsert_replay
 
     base = str(tmp_path / "user_snapshot")
     snap1 = {
         r.user_id: (r.last_ts_us, r.last_value, r.n_updates)
-        for r in run_stream_upsert_batchlike(spark, SF_DIR, base).collect()
+        for r in run_stream_upsert_replay(spark, SF_DIR, out_path=base).collect()
     }
     want = {
         r.user_id: (r.last_ts_us, r.last_value, r.n_updates)
@@ -269,7 +265,7 @@ def test_stream_cdc_apply_matches_batch(spark, events, tmp_path):
     assert snap1 == want
     snap2 = {
         r.user_id: (r.last_ts_us, r.last_value, r.n_updates)
-        for r in run_stream_upsert_batchlike(spark, SF_DIR, base).collect()
+        for r in run_stream_upsert_replay(spark, SF_DIR, out_path=base).collect()
     }
     assert set(snap2) == set(snap1)
     for uid, (ts, val, n) in snap2.items():
@@ -306,23 +302,25 @@ def test_stream_scd2_apply_matches_batch(spark, orders, tmp_path):
     """Incremental SCD2 maintenance over a 3-batch feed converges to the
     one-shot batch build."""
     from clusterforge_spark.operators.relational import scd2_build
-    from clusterforge_spark.streaming.sessionize import run_stream_scd2_batchlike
+    from clusterforge_spark.streaming.sessionize import run_stream_scd2_apply
 
     feed = str(tmp_path / "feed")
     out = str(tmp_path / "scd2")
     orders.repartition(3).write.parquet(feed)
-    got = run_stream_scd2_batchlike(spark, feed, out)
+    got = run_stream_scd2_apply(spark, feed, out)
     want = scd2_build(orders)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
-def test_ewma_stream_matches_batch(spark, events):
+def test_ewma_stream_matches_batch(spark, events, tmp_path):
     from clusterforge_spark.operators.relational import ewma_per_user
-    from clusterforge_spark.streaming.sessionize import run_ewma_stream_batchlike
+    from clusterforge_spark.streaming.sessionize import run_stream_ewma_replay
 
     got = {
         r.user_id: (r.n_events, round(r.ewma, 6))
-        for r in run_ewma_stream_batchlike(spark, "/root/testdata/sf0.001").collect()
+        for r in run_stream_ewma_replay(
+            spark, SF_DIR, out_path=str(tmp_path / "ewma")
+        ).collect()
     }
     want = {
         r.user_id: (r.n_events, r.ewma) for r in ewma_per_user(events).collect()
@@ -335,25 +333,15 @@ def test_ewma_stream_matches_batch(spark, events):
 
 def test_stream_static_dim_join_matches_batch(spark, events, tmp_path):
     from clusterforge_spark.sources.readers import load_table
-    from clusterforge_spark.streaming.sessionize import (
-        enrich_stream_with_dim,
-        read_events_stream,
-        _await_or_raise,
-    )
+    from clusterforge_spark.streaming.sessionize import enrich_stream_with_dim
 
-    customer = load_table(spark, "/root/testdata/sf0.001", "customer")
-    out = enrich_stream_with_dim(
-        read_events_stream(spark, "/root/testdata/sf0.001"), customer
+    customer = load_table(spark, SF_DIR, "customer")
+    got = run_stream_replay_to_parquet(
+        spark,
+        enrich_stream_with_dim(read_events_stream(spark, SF_DIR), customer),
+        str(tmp_path / "dim_join"),
+        "append",
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("dim_join_result")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_raise(q, 180)
-    got = spark.table("dim_join_result")
     assert got.count() == events.count()
     # spot-check enrichment against the batch join
     import pyspark.sql.functions as F
@@ -416,14 +404,22 @@ def test_checkpoint_resume_processes_only_new_files(spark, events, tmp_path):
     assert final.select("event_id").distinct().count() == events.count()
 
 
-def test_stream_quality_filter_matches_batch(spark, documents):
-    from clusterforge_spark.streaming.sessionize import run_quality_filter_batchlike
+def test_stream_quality_filter_matches_batch(spark, documents, tmp_path):
+    from clusterforge_spark.streaming.sessionize import (
+        read_documents_stream,
+        stream_quality_filter,
+    )
     from clusterforge_spark.operators.text import quality_score
     from pyspark.sql import functions as F
 
     got = {
         r.doc_id: (r.lang, r.quality, r.gate)
-        for r in run_quality_filter_batchlike(spark, SF_DIR).collect()
+        for r in run_stream_replay_to_parquet(
+            spark,
+            stream_quality_filter(read_documents_stream(spark, SF_DIR)),
+            str(tmp_path / "quality"),
+            "append",
+        ).collect()
     }
     scored = quality_score(documents).join(
         documents.select("doc_id", "lang"), "doc_id"
@@ -450,7 +446,7 @@ def test_stream_countmin_multibatch_equals_batch_sketch(spark, tmp_path):
     from clusterforge_spark.operators.sketches import countmin_build
     from clusterforge_spark.sources.readers import load_table
     from clusterforge_spark.streaming.sessionize import (
-        run_stream_countmin_batchlike,
+        run_stream_countmin,
     )
 
     docs = load_table(spark, SF_DIR, "documents")
@@ -462,7 +458,7 @@ def test_stream_countmin_multibatch_equals_batch_sketch(spark, tmp_path):
         ).parquet(src)
 
     sketch_path = str(tmp_path / "sketch")
-    streamed = run_stream_countmin_batchlike(spark, src, sketch_path)
+    streamed = run_stream_countmin(spark, src, sketch_path)
     want = {
         (r.row, r.bucket): r.counter for r in countmin_build(docs).collect()
     }
@@ -475,10 +471,10 @@ def test_stream_psi_zero_on_reference_and_positive_on_shift(spark, tmp_path):
     clearly positive when the value distribution shifts."""
     from pyspark.sql import functions as F
 
-    from clusterforge_spark.streaming.sessionize import run_stream_psi_batchlike
+    from clusterforge_spark.streaming.sessionize import run_stream_psi
 
     log1 = str(tmp_path / "psi_ref")
-    out = run_stream_psi_batchlike(spark, SF_DIR, log1)
+    out = run_stream_psi(spark, SF_DIR, log1)
     rows = out.collect()
     assert len(rows) == 1  # one parquet file -> one micro-batch
     assert abs(rows[0].psi) < 1e-6  # identical distribution
@@ -516,7 +512,7 @@ def test_stream_psi_zero_on_reference_and_positive_on_shift(spark, tmp_path):
 
     S.read_events_stream = patched
     try:
-        out2 = run_stream_psi_batchlike(spark, ref_dir, log2)
+        out2 = run_stream_psi(spark, ref_dir, log2)
     finally:
         S.read_events_stream = orig_read
     rows2 = out2.collect()
@@ -596,8 +592,6 @@ def test_curated_ingest_watermarked_dedup_variant(spark, documents, tmp_path):
     """The production configuration (bounded dedup state via
     dropDuplicatesWithinWatermark on processing time) runs and dedups
     duplicates arriving inside the watermark window."""
-    from pyspark.sql import functions as F
-
     from clusterforge_spark.streaming.sessionize import stream_curated_ingest
 
     src = tmp_path / "in"
@@ -607,84 +601,13 @@ def test_curated_ingest_watermarked_dedup_variant(spark, documents, tmp_path):
         str(src / "b.parquet")
     )
     stream = spark.readStream.schema(base.schema).parquet(str(src) + "/*")
-    out = stream_curated_ingest(stream, dedup_watermark="10 minutes")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("q_wm_curation")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.table("q_wm_curation").collect()
+    rows = run_stream_replay_to_parquet(
+        spark,
+        stream_curated_ingest(stream, dedup_watermark="10 minutes"),
+        str(tmp_path / "wm_curation"),
+        "append",
+    ).collect()
     assert len(rows) == 20  # the 5 in-window duplicates were dropped
-
-
-def test_kafka_source_spec_options_and_decode(spark):
-    """The Kafka config surface: the spec renders the exact option map
-    (safety defaults explicit), and the value-decode projection turns
-    the wire frame into typed rows with the (topic, partition, offset)
-    bookkeeping columns — verified on a static frame with the same
-    schema the kafka source yields (the kafka-clients jar itself is a
-    deployment concern, absent here by design)."""
-    from pyspark.sql import types as T
-
-    from clusterforge_spark.streaming.sources import (
-        KafkaSourceSpec,
-        decode_json_value,
-    )
-
-    spec = KafkaSourceSpec(
-        bootstrap_servers="b1:9092,b2:9092",
-        topics=("events", "events_dlq"),
-        max_offsets_per_trigger=500,
-    )
-    opts = spec.options()
-    assert opts["kafka.bootstrap.servers"] == "b1:9092,b2:9092"
-    assert opts["subscribe"] == "events,events_dlq"
-    assert opts["startingOffsets"] == "earliest"
-    assert opts["failOnDataLoss"] == "false"
-    assert opts["maxOffsetsPerTrigger"] == "500"
-    assert spec.reader(spark) is not None  # configured, not loaded
-    # contract: the spec produces a real readStream.format("kafka") plan
-    # attempt — load() must reach Spark's data-source RESOLUTION. In
-    # this container (no connector jar) that resolution fails with the
-    # kafka-connector-missing error naming the artifact to deploy; on a
-    # classpath WITH the jar the same call must return the wire-frame
-    # stream (key/value/topic/partition/offset) — both outcomes prove
-    # the config surface reached the engine.
-    try:
-        wire = spec.reader(spark).load()
-    except Exception as ei:  # noqa: BLE001
-        msg = str(ei).lower()
-        assert "kafka" in msg
-        assert (
-            "failed to find" in msg
-            or "data_source_not_found" in msg
-            or "deploy" in msg
-        )
-    else:
-        cols = set(wire.columns)
-        assert {"key", "value", "topic", "partition", "offset"} <= cols
-
-    schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    import datetime as dt
-
-    raw = spark.createDataFrame(
-        [
-            ("events", 0, 7, dt.datetime(2024, 1, 1), b'{"user_id": 5, "value": 1.5}'),
-            ("events", 0, 8, dt.datetime(2024, 1, 1), b"not json"),
-        ],
-        "topic string, partition int, offset long, timestamp timestamp, value binary",
-    )
-    rows = {r["offset"]: r for r in decode_json_value(raw, schema).collect()}
-    assert (rows[7]["user_id"], rows[7]["value"]) == (5, 1.5)
-    assert rows[8]["user_id"] is None  # corrupt record quarantined as NULLs
 
 
 def test_stream_replay_capture_matches_batch(spark, tmp_path):
@@ -737,8 +660,7 @@ def test_rate_source_live_unbounded_agg(spark):
     no jars needed): windowed counts keep growing while the query runs.
     Complements the file-replay suite: everything else replays finite
     parquet; this proves the same windowed-agg plan runs against a live
-    source, the exact swap a Kafka deployment makes (sources.py keeps
-    the Kafka config surface; the broker isn't available offline).
+    source, the swap a deployment reading a message bus makes.
 
     Marked ``slow`` (r7 ADVICE): the assertion depends on wall-clock
     behavior of a live source; a loaded runner can deselect with
@@ -1000,3 +922,50 @@ def test_stream_ann_ingest_matches_batch_assignment(spark, embeddings, tmp_path)
     }
     assert got == want and len(got) > 0
     cells.unpersist(blocking=True)
+
+
+def test_replay_harness_restores_session_and_cleans_up(spark, tmp_path, monkeypatch):
+    """run_stream_replay_to_parquet leaves nothing behind, on success and
+    when a micro-batch fails: no streaming query stays active, the
+    session's shuffle-partition count is back to its value before the
+    call, and the run's fresh checkpoint dir is removed. The failing
+    replay raises instead of returning a partial capture."""
+    import os
+
+    from pyspark.errors import StreamingQueryException
+
+    from clusterforge_spark.streaming.sessionize import (
+        _scratch_root,
+        hourly_user_counts,
+    )
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_TMP", str(tmp_path / "rt"))
+    ckpt_root = os.path.join(_scratch_root(), "ckpt")
+    parts_before = spark.conf.get("spark.sql.shuffle.partitions")
+
+    def assert_clean():
+        assert spark.streams.active == []
+        assert spark.conf.get("spark.sql.shuffle.partitions") == parts_before
+        assert os.listdir(ckpt_root) == []
+
+    out = run_stream_replay_to_parquet(
+        spark,
+        hourly_user_counts(read_events_stream(spark, SF_DIR)),
+        str(tmp_path / "ok"),
+        "complete",
+    )
+    assert out.count() > 0
+    assert_clean()
+
+    def failing_transform(batch_df):
+        raise RuntimeError("planted batch_transform failure")
+
+    with pytest.raises(StreamingQueryException, match="planted batch_transform failure"):
+        run_stream_replay_to_parquet(
+            spark,
+            read_events_stream(spark, SF_DIR),
+            str(tmp_path / "bad"),
+            "append",
+            batch_transform=failing_transform,
+        )
+    assert_clean()
