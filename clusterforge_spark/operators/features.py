@@ -3,9 +3,9 @@
 Reference semantics preserved (SURVEY.md §1.4):
   * RFM per customer: Recency from max(ts) vs a literal reference instant,
     Frequency = exact COUNT(DISTINCT invoice) cast double, Monetary =
-    SUM(amount)  (data.rs:153-164), summed as exact integer cents: the
-    same double as an exact decimal sum on 2-dp amounts, and ~20 %
-    cheaper per RFM op (see compute_rfm).
+    SUM(amount)  (data.rs:153-164), summed as exact integer cents
+    (``rounding.cents``): the same double as an exact decimal sum on 2-dp
+    amounts, and ~20 % cheaper per RFM op (see compute_rfm).
   * Recency = (ref_µs − last_µs) / 1e6 / 86400 fractional days
     (data.rs:166-169).
   * HAVING Recency ≥ 0 ∧ Frequency > 0 ∧ Monetary > 0 (data.rs:177-183).
@@ -67,23 +67,23 @@ def compute_rfm(
     and with it the summation order of every downstream double
     aggregate, does not depend on the AQE setting.
 
-    Money is summed as exact integer cents, ``floor(value·100 + 0.5)``
-    as a bigint, then divided by 100.0 (oracle_sql's money rule). On 2-dp
-    input this is the same double as the exact ``decimal(18,2)`` sum cast
-    to double: ·100 lands within an ulp of the integer, the long sum is
-    exact and order-independent, and below 2^53 cents long→double is
-    exact and the division correctly rounded. A sum past 2^63 cents
-    raises under ANSI mode instead of wrapping. The decimal sum's
-    ``decimal(28,2)`` result accumulated in BigDecimal: the benchmark's
-    541,910-row ``rfm_retail`` op (4 cores) took 0.684 s median with it
-    and 0.523 s with cents.
+    Money is summed as exact integer cents (``rounding.cents``), then
+    divided by 100.0. On 2-dp input this is the same double as an exact
+    decimal sum cast to double: ·100 lands within an ulp of the integer,
+    the long sum is exact and order-independent, and below 2^53 cents
+    long→double is exact and the division correctly rounded. An amount
+    with no bigint cents raises, and so does a sum past 2^63 cents (ANSI
+    mode) instead of wrapping. A decimal sum's ``decimal(28,2)`` result
+    accumulated in BigDecimal: the benchmark's 541,910-row
+    ``rfm_retail`` op (4 cores) took 0.684 s median with it and 0.523 s
+    with cents.
     """
     from clusterforge_spark.functions.partitioning import suggest_agg_partitions
+    from clusterforge_spark.functions.rounding import cents
 
     n = suggest_agg_partitions(events) or int(
         events.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
-    cents = F.floor(F.col("value") * 100 + 0.5).cast("bigint")
     return (
         events.repartition(n, "user_id")
         .groupBy("user_id")
@@ -91,7 +91,7 @@ def compute_rfm(
             ((_ref_us(ref_instant) - F.unix_micros(F.max("ts"))).cast("double")
              / F.lit(float(US_PER_DAY))).alias("recency"),
             F.countDistinct("event_id").cast("double").alias("frequency"),
-            (F.sum(cents) / 100.0).alias("monetary"),
+            (F.sum(cents("value")) / 100.0).alias("monetary"),
         )
         # post-aggregation quality filter (HAVING) — data.rs:177-183
         .filter((F.col("recency") >= 0) & (F.col("frequency") > 0) & (F.col("monetary") > 0))

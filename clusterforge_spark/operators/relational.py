@@ -5,6 +5,10 @@ driver's TPC-H-ish tables, plus the join/sort/window surface the reference
 lacks but any engine user needs (SURVEY.md §2.3). Everything here is pure
 DataFrame API → Catalyst gets predicate pushdown, column pruning, constant
 folding and join planning for free; no UDFs, no collect().
+
+Every money expression goes through ``rounding.cents`` (exact bigint
+cents; an amount with none raises). The decimal sufficient statistics
+kept by design are listed in oracle_sql's determinism rules.
 """
 
 from __future__ import annotations
@@ -13,7 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from clusterforge_spark.functions.partitioning import prefix_sum_before, source_bytes
-from clusterforge_spark.functions.rounding import round_det
+from clusterforge_spark.functions.rounding import cents, cents_sql, round_det
 
 
 def scan_project(lineitem: DataFrame) -> DataFrame:
@@ -79,12 +83,10 @@ def having_filter(orders: DataFrame) -> DataFrame:
     return (
         orders.groupBy("o_custkey")
         .agg(
-            # Money sums accumulate in DECIMAL: exact, order-independent
-            # (a double sum's low bits depend on partial-agg order — not
-            # reproducible across engines or even across runs at scale).
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_spend"),
+            # Money sums accumulate exact cents (rounding.cents): a double
+            # sum's low bits depend on partial-agg order — not
+            # reproducible across engines or even across runs at scale.
+            (F.sum(cents("o_totalprice")) / 100.0).alias("total_spend"),
             F.count("*").alias("order_count"),
         )
         .filter((F.col("total_spend") > 100000.0) & (F.col("order_count") > 1))
@@ -142,10 +144,7 @@ def top_k(lineitem: DataFrame, k: int = 100) -> DataFrame:
 #: ANY row count, unlike a raw double Σ price·(1−disc), whose partial-agg
 #: reorder error at ~10⁹ rows exceeds the 2dp rounding guard and makes
 #: output nondeterministic across runs/engines.
-REVENUE_E4 = (
-    "cast(floor(l_extendedprice * 100 + 0.5) as bigint) * "
-    "(100 - cast(floor(l_discount * 100 + 0.5) as bigint))"
-)
+REVENUE_E4 = f"{cents_sql('l_extendedprice')} * (100 - {cents_sql('l_discount')})"
 
 
 def _round_half_up(x: float, d: int) -> float:
@@ -305,7 +304,7 @@ def sessionize_gap(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
         F.unix_micros(F.min("ts")).alias("session_start_us"),
         F.unix_micros(F.max("ts")).alias("session_end_us"),
         F.count("*").alias("n_events"),
-        F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("session_value"),
+        (F.sum(cents("value")) / 100.0).alias("session_value"),
     )
 
 
@@ -332,7 +331,7 @@ def window_sessionize(events: DataFrame) -> DataFrame:
         "user_id", F.date_trunc("hour", "ts").alias("hour_start")
     ).agg(
         F.count("*").alias("events_in_hour"),
-        F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("value_in_hour"),
+        (F.sum(cents("value")) / 100.0).alias("value_in_hour"),
     )
     w = Window.partitionBy("user_id").orderBy(
         F.col("events_in_hour").desc(), F.col("hour_start")
@@ -348,7 +347,7 @@ def window_sessionize(events: DataFrame) -> DataFrame:
 
 def window_funcs(events: DataFrame) -> DataFrame:
     """Window-function breadth on one per-user ordered frame: lag / lead
-    / running DECIMAL sum / ntile / percent_rank / row_number.
+    / running cents sum / ntile / percent_rank / row_number.
 
     The order key (ts, event_id) is a total order (event_id unique), so
     every function is deterministic. ONE shuffle on user_id serves all
@@ -368,10 +367,7 @@ def window_funcs(events: DataFrame) -> DataFrame:
         "value",
         F.lag("value", 1).over(w).alias("prev_value"),
         F.lead("value", 1).over(w).alias("next_value"),
-        F.sum(F.col("value").cast("decimal(18,2)"))
-        .over(running)
-        .cast("double")
-        .alias("running_value"),
+        (F.sum(cents("value")).over(running) / 100.0).alias("running_value"),
         F.ntile(4).over(w).cast("long").alias("quartile"),
         round_det(F.percent_rank().over(w), 6).alias("pct_rank"),
         F.row_number().over(w).cast("long").alias("rn"),
@@ -671,7 +667,7 @@ def range_join_bands(events: DataFrame) -> DataFrame:
     )
     return joined.groupBy("band_id", "lo", "hi").agg(
         F.count("*").alias("n_events"),
-        F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
+        (F.sum(cents("value")) / 100.0).alias("sum_value"),
     )
 
 
@@ -748,7 +744,7 @@ def time_bucket_rollup(events: DataFrame) -> DataFrame:
     )
     return b.rollup("day_us", "hour_us", "m5_us").agg(
         F.count("*").alias("n_events"),
-        F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
+        (F.sum(cents("value")) / 100.0).alias("sum_value"),
         F.grouping_id().cast("long").alias("grain"),
     )
 
@@ -760,17 +756,17 @@ def corr_subquery(spark, orders: DataFrame) -> DataFrame:
     Catalyst de-correlates both subqueries into aggregate+join — no
     per-row re-execution (asserted in tests/test_plans.py). The
     comparison is phrased sum/count instead of avg so both engines
-    compare bit-identical doubles (decimal sum, exact integer count,
+    compare bit-identical doubles (cents sum, exact integer count,
     one correctly-rounded multiply each side).
     """
     orders.createOrReplaceTempView("v_orders_cs")
     return spark.sql(
-        """
+        f"""
         SELECT o_orderkey, o_custkey, o_totalprice
         FROM v_orders_cs o
         WHERE o_totalprice * (SELECT COUNT(*) FROM v_orders_cs i
                               WHERE i.o_custkey = o.o_custkey)
-              > (SELECT CAST(SUM(CAST(i.o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+              > (SELECT CAST(SUM({cents_sql("i.o_totalprice")}) AS DOUBLE) / 100.0D
                  FROM v_orders_cs i WHERE i.o_custkey = o.o_custkey)
         """
     )
@@ -936,9 +932,7 @@ def session_window_agg(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
         )
         .agg(
             F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias(
-                "session_value"
-            ),
+            (F.sum(cents("value")) / 100.0).alias("session_value"),
         )
         .select(
             "user_id",
@@ -1018,10 +1012,9 @@ def tpch_pricing_summary(
     reorder error at ~10⁹ rows exceeds the 2dp rounding guard. Averages
     are written as exact-sum/count and rounded at 4dp."""
     f = lineitem.filter(F.col("l_shipdate") <= F.lit(ship_cutoff).cast("timestamp"))
-    qc = "cast(floor(l_quantity * 100 + 0.5) as bigint)"
-    pc = "cast(floor(l_extendedprice * 100 + 0.5) as bigint)"
-    dc = "cast(floor(l_discount * 100 + 0.5) as bigint)"
-    tc = "cast(floor(l_tax * 100 + 0.5) as bigint)"
+    qc, pc, dc, tc = (
+        cents_sql(c) for c in ("l_quantity", "l_extendedprice", "l_discount", "l_tax")
+    )
 
     def _esum(expr: str):
         return F.expr(f"cast(sum(cast({expr} as decimal(38,0))) as double)")
@@ -1069,10 +1062,7 @@ def tpch_forecast_revenue(
         & (F.col("l_discount") <= disc_hi)
         & (F.col("l_quantity") < max_qty)
     )
-    rev_e4 = (
-        "cast(floor(l_extendedprice * 100 + 0.5) as bigint) * "
-        "cast(floor(l_discount * 100 + 0.5) as bigint)"
-    )
+    rev_e4 = f"{cents_sql('l_extendedprice')} * {cents_sql('l_discount')}"
     return f.agg(
         round_det(
             F.expr(f"cast(sum(cast({rev_e4} as decimal(38,0))) as double) / 10000.0"),
@@ -1141,8 +1131,8 @@ def rolling_window_value(events: DataFrame) -> DataFrame:
     correctly).
 
     One shuffle (hash by user) + one sort per partition serves the whole
-    frame family; the trailing sum is a decimal fold for cross-engine
-    exactness, cast back to double at the edge. At 100 TB this is the
+    frame family; the trailing sum is an exact cents fold
+    (rounding.cents), divided back to dollars at the edge. At 100 TB this is the
     standard feature-backfill shape: partition by entity, range frame on
     time, all computed in one pass without self-joins.
     """
@@ -1154,12 +1144,11 @@ def rolling_window_value(events: DataFrame) -> DataFrame:
         .orderBy(us)
         .rangeBetween(-3_600_000_000, Window.currentRow)
     )
-    dec = F.col("value").cast("decimal(18,2)")
     return events.select(
         "user_id",
         "event_id",
         us.alias("ts_us"),
-        F.sum(dec).over(w).cast("double").alias("value_1h"),
+        (F.sum(cents("value")).over(w) / 100.0).alias("value_1h"),
         F.count(F.lit(1)).over(w).cast("long").alias("n_events_1h"),
     )
 
@@ -1263,9 +1252,7 @@ def resample_daily(events: DataFrame) -> DataFrame:
         .groupBy("user_id", "day")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("day_value"),
+            (F.sum(cents("value")) / 100.0).alias("day_value"),
         )
     )
     spine = (
@@ -1394,26 +1381,26 @@ def corr_matrix(lineitem: DataFrame, cols: tuple[str, ...] = CORR_COLS) -> DataF
     cross-products) come from a single map-side-combinable aggregate;
     the C(k,2) correlations are O(1) arithmetic unpivoted from the 1-row
     result. The 2dp inputs are converted to integer CENTS
-    (floor(c·100 + 0.5): the true value is exactly 2dp, so the rounding
+    (rounding.cents: the true value is exactly 2dp, so the rounding
     only corrects float representation error — exact), products are exact
     int64 arithmetic, and the sums accumulate in decimal(38,0), so the
     doubles derived from them are bit-identical on any engine. Pearson
     correlation is scale-invariant, so the uniform ×100 leaves the
-    result unchanged. ~3× cheaper than decimal(18,2) products, whose
+    result unchanged. ~3× cheaper than 2-dp decimal products, whose
     37-digit results take the BigDecimal slow path per row. One scan at
     any scale, no per-pair jobs.
     """
-    cents = {c: f"cast(floor({c} * 100 + 0.5) as bigint)" for c in cols}
+    e2 = {c: cents_sql(c) for c in cols}
     aggs = [F.expr("cast(count(*) as double) as n")]
     for c in cols:
         aggs.append(
             F.expr(
-                f"cast(sum(cast({cents[c]} as decimal(38,0))) as double) as s_{c}"
+                f"cast(sum(cast({e2[c]} as decimal(38,0))) as double) as s_{c}"
             )
         )
         aggs.append(
             F.expr(
-                f"cast(sum(cast({cents[c]} * {cents[c]} as decimal(38,0))) "
+                f"cast(sum(cast({e2[c]} * {e2[c]} as decimal(38,0))) "
                 f"as double) as ss_{c}"
             )
         )
@@ -1421,7 +1408,7 @@ def corr_matrix(lineitem: DataFrame, cols: tuple[str, ...] = CORR_COLS) -> DataF
     for a, b in pairs:
         aggs.append(
             F.expr(
-                f"cast(sum(cast({cents[a]} * {cents[b]} as decimal(38,0))) "
+                f"cast(sum(cast({e2[a]} * {e2[b]} as decimal(38,0))) "
                 f"as double) as sp_{a}__{b}"
             )
         )
@@ -1476,14 +1463,14 @@ def spearman_matrix(
     """
     from pyspark.sql.window import Window
 
-    cents = {c: f"cast(floor({c} * 100 + 0.5) as bigint)" for c in cols}
+    e2 = {c: cents_sql(c) for c in cols}
     # complete-case analysis: rows with a NULL in ANY column are dropped
     # up front — engines disagree on NULL placement in window ordering
     # (Spark nulls-first vs DuckDB nulls-last), so a NULL histogram group
     # would shift every rank on one engine only
     notnull = " AND ".join(f"{c} IS NOT NULL" for c in cols)
     base = lineitem.filter(F.expr(notnull)).select(
-        *[F.expr(f"{cents[c]} as v_{c}") for c in cols]
+        *[F.expr(f"{e2[c]} as v_{c}") for c in cols]
     )
     # The plan references base 1 + len(cols) times. Whether to
     # materialize it is SIZE-DEPENDENT: below ``materialize_bytes`` of
@@ -1626,7 +1613,7 @@ def decile_stats(events: DataFrame, n_buckets: int = 10) -> DataFrame:
     aggregates — the quantile-bucketing feature transform (score
     banding, risk deciles). The ordering is made total with the
     event_id tie-break, so bucket membership is deterministic;
-    per-bucket sums are decimal-exact.
+    per-bucket sums are exact cents (rounding.cents).
 
     Scale shape: NO partition-less window. The global rank comes from
     partitioning.total_order_rank (histogram prefix sum + value-local
@@ -1655,8 +1642,7 @@ def decile_stats(events: DataFrame, n_buckets: int = 10) -> DataFrame:
         F.min("value").alias("lo"),
         F.max("value").alias("hi"),
         round_det(
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double")
-            / F.count(F.lit(1)).cast("double"),
+            F.sum(cents("value")) / 100.0 / F.count(F.lit(1)).cast("double"),
             4,
         ).alias("mean_value"),
     )
@@ -2087,17 +2073,13 @@ def order_reconciliation(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
     integer TEN-THOUSANDTHS of a dollar (price_cents × (100 −
     discount_cents) — int64 products of the 2dp inputs, summed in
     decimal(38,0)), so the mismatch SET is exact while skipping the
-    per-row BigDecimal slow path of decimal(18,2) products. (The
+    per-row BigDecimal slow path of 2-dp decimal products. (The
     synthetic data generates o_totalprice independently of lineitem, so
     at any SF this reports nearly every order — the query's value is
     the exact delta audit.)
     """
-    net_e4 = (
-        "cast(floor(l_extendedprice * 100 + 0.5) as bigint) * "
-        "(100 - cast(floor(l_discount * 100 + 0.5) as bigint))"
-    )
     line_tot = lineitem.groupBy("l_orderkey").agg(
-        F.expr(f"sum(cast({net_e4} as decimal(38,0))) as line_net_e4")
+        F.expr(f"sum(cast({REVENUE_E4} as decimal(38,0))) as line_net_e4")
     )
     # LEFT join + coalesce-to-0: an order with NO lineitem rows is the
     # most severe header/detail mismatch there is — an inner join would
@@ -2108,12 +2090,7 @@ def order_reconciliation(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
         "line_net_e4",
         F.coalesce(F.col("line_net_e4"), F.lit(0).cast("decimal(38,0)")),
     )
-    delta_e4 = (
-        F.expr("cast(floor(o_totalprice * 100 + 0.5) as bigint) * 100").cast(
-            "decimal(38,0)"
-        )
-        - F.col("line_net_e4")
-    )
+    delta_e4 = (cents("o_totalprice") * 100).cast("decimal(38,0)") - F.col("line_net_e4")
     return (
         j.select(
             "o_orderkey",
@@ -2169,9 +2146,7 @@ def dow_seasonality(events: DataFrame) -> DataFrame:
     )
     per = events.groupBy(F.col("event_type"), dow.alias("dow")).agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.expr(
-            "sum(cast(cast(floor(value * 100 + 0.5) as bigint) as decimal(38,0)))"
-        ).alias("sum_cents"),
+        F.sum(cents("value").cast("decimal(38,0)")).alias("sum_cents"),
     )
     tot = per.groupBy("event_type").agg(
         F.sum("n_events").cast("long").alias("n_total"),
@@ -2282,7 +2257,7 @@ def normal_equations(
     """
     terms = {"1": "cast(100 as bigint)"}
     for c in (*x_cols, y_col):
-        terms[c] = f"cast(floor({c} * 100 + 0.5) as bigint)"
+        terms[c] = cents_sql(c)
     names = ["1", *x_cols]
     pairs = []
     for i, a in enumerate(names):
@@ -2657,9 +2632,7 @@ def tpch_market_share(
 #: e4-unit profit: revenue minus a retail-cost proxy (this schema has no
 #: partsupp.ps_supplycost; p_retailprice·quantity stands in).
 PROFIT_E4 = (
-    f"({REVENUE_E4}) - "
-    "cast(floor(p_retailprice * 100 + 0.5) as bigint) * "
-    "cast(floor(l_quantity * 100 + 0.5) as bigint)"
+    f"({REVENUE_E4}) - {cents_sql('p_retailprice')} * {cents_sql('l_quantity')}"
 )
 
 
@@ -2851,10 +2824,7 @@ def tpch_small_quantity_revenue(
     ).filter(F.col("l_quantity") < F.lit(fraction) * F.col("avg_qty"))
     return small.agg(
         round_det(
-            F.expr(
-                "cast(sum(cast(cast(floor(l_extendedprice * 100 + 0.5) as bigint)"
-                " as decimal(38,0))) as double)"
-            )
+            F.sum(cents("l_extendedprice").cast("decimal(38,0)")).cast("double")
             / F.lit(100.0)
             / F.lit(7.0),
             2,
@@ -2887,7 +2857,7 @@ def tpch_global_sales_opportunity(
     cust = customer.filter(F.col("c_nationkey").isin(keys)).select(
         "c_custkey",
         "c_nationkey",
-        F.expr("cast(floor(c_acctbal * 100 + 0.5) as bigint) as bal_e2"),
+        cents("c_acctbal").alias("bal_e2"),
     )
     avg_bal = cust.filter(F.col("bal_e2") > 0).agg(
         (F.sum(F.expr("cast(bal_e2 as decimal(38,0))")).cast("double")
@@ -2912,8 +2882,7 @@ Q2_REGION = "EUROPE"
 #: integer-valued in this corpus (asserted by the oracle's identical
 #: floor-division), so the division is engine-exact integer arithmetic.
 UNIT_COST_E2 = (
-    "cast(floor(l_extendedprice * 100 + 0.5) as bigint)"
-    " div cast(floor(l_quantity + 0.5) as bigint)"
+    f"{cents_sql('l_extendedprice')} div cast(floor(l_quantity + 0.5) as bigint)"
 )
 
 
@@ -3245,7 +3214,7 @@ def anova_f(orders: DataFrame) -> DataFrame:
     """
     g = orders.select(
         "o_orderpriority",
-        F.expr("cast(floor(o_totalprice * 100 + 0.5) as bigint) as v_e2"),
+        cents("o_totalprice").alias("v_e2"),
     ).groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).cast("long").alias("n_g"),
         F.sum(F.expr("cast(v_e2 as decimal(38,0))")).alias("sum_g"),
@@ -3929,7 +3898,7 @@ def temporal_split(orders: DataFrame) -> DataFrame:
     and never sorted.
 
     Output is the audit summary per split (counts, date range, exact
-    DECIMAL revenue), not the labeled rows — the labeling expression is
+    cents revenue), not the labeled rows — the labeling expression is
     the operator; the summary is what a pipeline asserts on.
     """
     from pyspark.sql.window import Window
@@ -3954,7 +3923,7 @@ def temporal_split(orders: DataFrame) -> DataFrame:
         .otherwise(F.lit("test"))
         .alias("split"),
         day.alias("dy"),
-        F.col("o_totalprice").cast("decimal(18,2)").alias("p"),
+        cents("o_totalprice").alias("p"),
     )
     return lab.groupBy("split").agg(
         F.count(F.lit(1)).cast("long").alias("n_orders"),
@@ -3962,7 +3931,7 @@ def temporal_split(orders: DataFrame) -> DataFrame:
         .alias("min_date"),
         F.date_format(F.date_from_unix_date(F.max("dy").cast("int")), "yyyy-MM-dd")
         .alias("max_date"),
-        F.sum("p").cast("double").alias("total_price"),
+        (F.sum("p") / 100.0).alias("total_price"),
     )
 
 
@@ -4279,9 +4248,7 @@ def kendall_daily(lineitem: DataFrame) -> DataFrame:
                 "cast(floor(unix_micros(l_shipdate) / 86400000000) as bigint)"
             ).alias("day"),
             F.expr(f"{REVENUE_E4} as revenue_e4"),
-            F.expr(
-                "cast(floor(l_quantity * 100 + 0.5) as bigint) as qty_e2"
-            ),
+            cents("l_quantity").alias("qty_e2"),
         )
         .groupBy("day")
         .agg(
@@ -4400,10 +4367,7 @@ def new_vs_returning(orders: DataFrame) -> DataFrame:
     ym = F.expr(
         "cast(year(o_orderdate) * 100 + month(o_orderdate) as int)"
     ).alias("ym")
-    cents = F.expr(
-        "cast(floor(o_totalprice * 100 + 0.5) as bigint)"
-    ).alias("cents")
-    o = orders.select("o_custkey", ym, cents)
+    o = orders.select("o_custkey", ym, cents("o_totalprice").alias("cents"))
     first = o.groupBy("o_custkey").agg(F.min("ym").alias("first_ym"))
     j = o.join(first, "o_custkey").withColumn(
         "is_new", F.col("ym") == F.col("first_ym")

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from clusterforge_spark.functions import hashing as H
 from clusterforge_spark.functions.partitioning import spread_partitions as _spread
+from clusterforge_spark.functions.rounding import cents
 
 
 def token_vocab_counts(documents: DataFrame, cache: bool = True) -> DataFrame:
@@ -264,10 +265,9 @@ def quantile_histogram_estimate(
     from clusterforge_spark.functions.partitioning import prefix_sum_before, source_bytes
     from pyspark.sql.window import Window
 
-    cents = events.filter(F.col("value").isNotNull()).select(
-        F.expr("cast(floor(value * 100 + 0.5) as bigint) as c")
-    )
-    vhist = cents.groupBy("c").agg(F.count(F.lit(1)).alias("cnt"))
+    vhist = events.filter(F.col("value").isNotNull()).select(
+        cents("value").alias("c")
+    ).groupBy("c").agg(F.count(F.lit(1)).alias("cnt"))
     # vhist feeds THREE subtrees (n_row, the exact prefix sum, the
     # bucket histogram) under three different partitionings, so no
     # exchange is reusable and an unmaterialized plan re-runs the

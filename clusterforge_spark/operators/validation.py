@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from clusterforge_spark.functions.partitioning import prefix_sum_before
-from clusterforge_spark.functions.rounding import round_det
+from clusterforge_spark.functions.rounding import cents, cents_sql, round_det
 
 #: numeric lineitem columns the profiler query covers
 PROFILE_COLS = ("l_quantity", "l_extendedprice", "l_discount", "l_tax")
@@ -35,9 +35,9 @@ def profile_columns(df: DataFrame, cols: tuple[str, ...] = PROFILE_COLS) -> Data
     multi-phase aggregation: measured 4.1 s vs 1.9 s for this shape at
     sf0.1, and the Expand multiplies a 100 TB scan by N+1.
 
-    Values travel as integer CENTS (floor(c·100 + 0.5) — exact for the
+    Values travel as integer CENTS (rounding.cents — exact for the
     2dp money domain): int64 group keys, min/max, and products avoid
-    the per-row BigDecimal slow path of decimal(18,2), ~25% cheaper at
+    the per-row BigDecimal slow path of 2-dp decimals, ~25% cheaper at
     sf0.1; sums accumulate in decimal(38,0) so no scale overflows. The
     remaining cost is the pair explode itself — inherent to exact
     per-column distinct counts in one unified shuffle.
@@ -47,8 +47,7 @@ def profile_columns(df: DataFrame, cols: tuple[str, ...] = PROFILE_COLS) -> Data
             F.array(
                 *[
                     F.expr(
-                        f"struct('{c}' as column, "
-                        f"cast(floor({c} * 100 + 0.5) as bigint) as value)"
+                        f"struct('{c}' as column, {cents_sql(c)} as value)"
                     )
                     for c in cols
                 ]
@@ -165,17 +164,15 @@ def value_histogram(orders: DataFrame, width: float = 50_000.0) -> DataFrame:
     """Fixed-width histogram of order value: bucket = floor(v/width).
 
     The classic distribution profile — one hash aggregate on a derived
-    integer key, map-side combine does nearly all the work; decimal sums
-    keep the per-bucket totals exact.
+    integer key, map-side combine does nearly all the work; cents sums
+    (rounding.cents) keep the per-bucket totals exact.
     """
     bucket = F.floor(F.col("o_totalprice") / F.lit(width)).cast("long")
     return (
         orders.groupBy(bucket.alias("bucket"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_value"),
+            (F.sum(cents("o_totalprice")) / 100.0).alias("total_value"),
         )
         .withColumn("bucket_lo", round_det(F.col("bucket") * F.lit(width), 2))
     )
@@ -592,7 +589,7 @@ def mannwhitney_value(events: DataFrame) -> DataFrame:
     # placement in window ordering (Spark nulls-first vs DuckDB
     # nulls-last), and a rank for "no measurement" is meaningless anyway
     base = events.filter(F.col("value").isNotNull()).select(
-        F.expr("cast(floor(value * 100 + 0.5) as bigint) as v"),
+        cents("value").alias("v"),
         (F.col("user_id") % 2 == 0).alias("is_a"),
     )
     hist = base.groupBy("v").agg(F.count(F.lit(1)).alias("cnt"))
@@ -650,16 +647,13 @@ def benford_check(orders: DataFrame) -> DataFrame:
     """
     import math
 
-    first = F.expr(
-        "cast(substring(cast(cast(floor(o_totalprice * 100 + 0.5) as bigint) "
-        "as string), 1, 1) as bigint)"
-    )
+    first = F.substring(cents("o_totalprice").cast("string"), 1, 1).cast("bigint")
     # filter on the CENTS being >= 1, not the raw amount: a sub-cent
     # total (0 < v < 0.005) rounds to 0 cents, whose first digit '0'
     # would hit element_at(expected, 0) — an ANSI INVALID_INDEX_OF_ZERO
     # abort — and has no Benford-defined leading digit anyway
     counts = (
-        orders.filter(F.expr("cast(floor(o_totalprice * 100 + 0.5) as bigint) >= 1"))
+        orders.filter(cents("o_totalprice") >= 1)
         .groupBy(first.alias("digit"))
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
@@ -703,9 +697,7 @@ def gini_concentration(events: DataFrame) -> DataFrame:
     # all-NULL user would otherwise shift every rank (same rule as the
     # other rank-family operators)
     per_user = events.filter(F.col("value").isNotNull()).groupBy("user_id").agg(
-        F.expr(
-            "sum(cast(cast(floor(value * 100 + 0.5) as bigint) as decimal(38,0)))"
-        ).alias("cents")
+        F.sum(cents("value").cast("decimal(38,0)")).alias("cents")
     )
     hist = per_user.groupBy("cents").agg(F.count(F.lit(1)).alias("cnt"))
     # distributed exclusive prefix over the per-user-total histogram
@@ -755,10 +747,7 @@ def hhi_by_segment(orders: DataFrame, customer: DataFrame) -> DataFrame:
     concentration (NULL, never a DIVIDE_BY_ZERO abort).
     """
     spend = orders.groupBy("o_custkey").agg(
-        F.expr(
-            "sum(cast(cast(floor(o_totalprice * 100 + 0.5) as bigint)"
-            " as decimal(38,0)))"
-        ).alias("cents")
+        F.sum(cents("o_totalprice").cast("decimal(38,0)")).alias("cents")
     )
     seg = spend.join(
         F.broadcast(customer.select("c_custkey", "c_mktsegment")),
@@ -802,9 +791,7 @@ def lorenz_deciles(events: DataFrame, n_buckets: int = 10) -> DataFrame:
     from clusterforge_spark.functions.partitioning import prefix_sum_before
 
     per_user = events.filter(F.col("value").isNotNull()).groupBy("user_id").agg(
-        F.expr(
-            "sum(cast(cast(floor(value * 100 + 0.5) as bigint) as decimal(38,0)))"
-        ).alias("cents")
+        F.sum(cents("value").cast("decimal(38,0)")).alias("cents")
     )
     hist = per_user.groupBy("cents").agg(F.count(F.lit(1)).alias("cnt"))
     ranks = prefix_sum_before(hist, "cents", ["cnt"])
@@ -865,7 +852,7 @@ def ks_test_value(events: DataFrame) -> DataFrame:
     row (n_a, n_b, d_stat 6dp, ks_lambda 4dp).
     """
     base = events.filter(F.col("value").isNotNull()).select(
-        F.expr("cast(floor(value * 100 + 0.5) as bigint) as v"),
+        cents("value").alias("v"),
         (F.col("user_id") % 2 == 0).alias("is_a"),
     )
     per_v = base.groupBy("v").agg(
@@ -1164,7 +1151,7 @@ def record_linkage(customers: DataFrame) -> DataFrame:
         "c_custkey",
         norm.alias("name_norm"),
         "c_nationkey",
-        F.expr("cast(floor(c_acctbal * 100 + 0.5) as bigint)").alias("bal_c"),
+        cents("c_acctbal").alias("bal_c"),
         "c_mktsegment",
     ).withColumn("blk", F.expr("right(name_norm, 8)"))
     dirty = prepped.filter(F.col("c_custkey") >= LINK_DIRTY_OFFSET).alias("d")
@@ -1406,7 +1393,7 @@ def conformal_interval(
     )
     base = orders.select(
         "o_orderpriority",
-        F.expr("cast(floor(o_totalprice * 100 + 0.5) as bigint) as y_e2"),
+        cents("o_totalprice").alias("y_e2"),
         h.alias("_split"),
     )
     train = base.filter(F.col("_split") <= 1)

@@ -7,12 +7,19 @@ centroids, new-point literal) with the Spark operators so the two sides
 can never drift.
 
 Cross-engine float determinism rules (mirrored in the operators):
-  * money sums accumulate exact integer cents, CAST(floor(x * 100 + 0.5)
-    AS BIGINT), then cast back to double and divide by 100.0 — exact and
-    order-independent; on 2-dp values the result equals an exact
-    DECIMAL(18,2) sum cast to double (the RFM features, the lineitem
-    queries). Some queries still sum DECIMAL(18,2), which agrees with
-    the cents rule on 2-dp values;
+  * one money rule: an amount becomes exact integer cents,
+    CAST(floor(x * 100 + 0.5) AS BIGINT), and a money sum is the sum of
+    those cents cast to double and divided by 100.0 — exact and
+    order-independent; on 2-dp values it equals an exact DECIMAL(18,2)
+    sum cast to double. The engine spells the rule once, as
+    functions/rounding.cents, which raises like this CAST does on an
+    amount with no bigint cents (out of range, NaN, ±inf);
+  * decimal sufficient statistics, kept by design: where a sum's
+    DECIMAL value feeds further decimal arithmetic it stays
+    DECIMAL(18,2) — q_linreg and q_grouped_linreg (Σx, Σy, Σxy, Σx²),
+    q_tpch_large_volume (the quantity threshold), q_cohort_ltv (the
+    weekly value), q_zscore_outliers (Σv, Σv²) and q_target_encoding
+    (the spend);
   * products/differences/sqrt of doubles are bit-identical IEEE ops, left
     unrounded;
   * anything downstream of avg/stddev (z-scores, distances, silhouette,
@@ -157,7 +164,7 @@ def q_rfm_features() -> str:
 
 def q_having_filter() -> str:
     return """SELECT o_custkey,
-       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_spend,
+       CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0 AS total_spend,
        count(*) AS order_count
 FROM orders
 GROUP BY o_custkey
@@ -196,7 +203,7 @@ def q_window_sessionize() -> str:
   SELECT user_id,
          date_trunc('hour', ts::TIMESTAMP) AS hour_start,
          count(*) AS events_in_hour,
-         CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS value_in_hour
+         CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0 AS value_in_hour
   FROM events
   GROUP BY 1, 2
 )
@@ -912,7 +919,7 @@ SELECT user_id, session_idx,
        epoch_us(min(tsu)) AS session_start_us,
        epoch_us(max(tsu)) AS session_end_us,
        count(*) AS n_events,
-       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS session_value
+       CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0 AS session_value
 FROM s
 GROUP BY 1, 2"""
 
@@ -949,7 +956,7 @@ def q_range_join_bands() -> str:
 )
 SELECT band_id, lo, hi,
        count(*) AS n_events,
-       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+       CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0 AS sum_value
 FROM events
 JOIN bands ON value >= lo AND value < hi
 GROUP BY band_id, lo, hi"""
@@ -1013,7 +1020,7 @@ def q_time_bucket_rollup() -> str:
 )
 SELECT day_us, hour_us, m5_us,
        count(*) AS n_events,
-       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
+       CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0 AS sum_value,
        CAST(grouping(day_us) * 4 + grouping(hour_us) * 2 + grouping(m5_us) AS BIGINT) AS grain
 FROM b
 GROUP BY ROLLUP(day_us, hour_us, m5_us)"""
@@ -1023,7 +1030,7 @@ def q_corr_subquery() -> str:
     return """SELECT o_orderkey, o_custkey, o_totalprice
 FROM orders o
 WHERE o_totalprice * (SELECT COUNT(*) FROM orders i WHERE i.o_custkey = o.o_custkey)
-      > (SELECT CAST(SUM(CAST(i.o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+      > (SELECT CAST(SUM(CAST(floor(i.o_totalprice * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0
          FROM orders i WHERE i.o_custkey = o.o_custkey)"""
 
 
@@ -1227,7 +1234,7 @@ SELECT user_id,
        epoch_us(min(tsu)) AS session_start_us,
        epoch_us(max(tsu)) + {gap_us} AS session_end_us,
        count(*) AS n_events,
-       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS session_value
+       CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0 AS session_value
 FROM s
 GROUP BY user_id, session_idx"""
 
@@ -1319,9 +1326,9 @@ def q_window_funcs() -> str:
        value,
        lag(value, 1) OVER w AS prev_value,
        lead(value, 1) OVER w AS next_value,
-       CAST(sum(CAST(value AS DECIMAL(18,2))) OVER
+       CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) OVER
             (PARTITION BY user_id ORDER BY ts::TIMESTAMP, event_id
-             ROWS UNBOUNDED PRECEDING) AS DOUBLE) AS running_value,
+             ROWS UNBOUNDED PRECEDING) AS DOUBLE) / 100.0 AS running_value,
        CAST(ntile(4) OVER w AS BIGINT) AS quartile,
        round(percent_rank() OVER w, 6) AS pct_rank,
        CAST(row_number() OVER w AS BIGINT) AS rn
@@ -1648,7 +1655,7 @@ SELECT vec_id, cos_sim, rank FROM ranked WHERE rank <= {k}"""
 def q_rolling_window() -> str:
     return """SELECT user_id, event_id,
        epoch_us(ts::TIMESTAMP) AS ts_us,
-       CAST(sum(value::DECIMAL(18,2)) OVER w AS DOUBLE) AS value_1h,
+       CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) OVER w AS DOUBLE) / 100.0 AS value_1h,
        CAST(count(*) OVER w AS BIGINT) AS n_events_1h
 FROM events
 WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts::TIMESTAMP)
@@ -1777,7 +1784,7 @@ def q_value_histogram(width: float = 50_000.0) -> str:
     w = repr(width)
     return f"""SELECT CAST(floor(o_totalprice / {w}) AS BIGINT) AS bucket,
        CAST(count(*) AS BIGINT) AS n_orders,
-       CAST(sum(o_totalprice::DECIMAL(18,2)) AS DOUBLE) AS total_value,
+       CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0 AS total_value,
        round(CAST(floor(o_totalprice / {w}) AS BIGINT) * {w}, 2) AS bucket_lo
 FROM orders
 GROUP BY 1"""
@@ -1822,7 +1829,7 @@ def q_resample_daily() -> str:
   SELECT user_id,
          CAST(floor(epoch_us(ts::TIMESTAMP) / 86400000000) AS BIGINT) AS day,
          CAST(count(*) AS BIGINT) AS n_events,
-         CAST(sum(value::DECIMAL(18,2)) AS DOUBLE) AS day_value
+         CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0 AS day_value
   FROM events
   GROUP BY 1, 2
 ),
@@ -3039,7 +3046,7 @@ SELECT decile,
        CAST(count(*) AS BIGINT) AS n,
        min(value) AS lo,
        max(value) AS hi,
-       round(CAST(sum(value::DECIMAL(18,2)) AS DOUBLE)
+       round(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0
              / CAST(count(*) AS DOUBLE), 4) AS mean_value
 FROM b GROUP BY decile"""
 
@@ -5802,7 +5809,7 @@ SELECT CASE WHEN epoch_us(o_orderdate::TIMESTAMP) // 86400000000 <= cut_d
        CAST(count(*) AS BIGINT) AS n_orders,
        min(strftime(o_orderdate::TIMESTAMP, '%Y-%m-%d')) AS min_date,
        max(strftime(o_orderdate::TIMESTAMP, '%Y-%m-%d')) AS max_date,
-       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
+       CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0 AS total_price
 FROM orders, cut
 GROUP BY 1"""
 
@@ -6715,7 +6722,7 @@ def q_stream_hourly_replay() -> str:
     return """SELECT user_id,
        epoch_us(date_trunc('hour', ts::TIMESTAMP)) AS hour_start_us,
        CAST(count(*) AS BIGINT) AS events_in_hour,
-       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS value_in_hour
+       CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0 AS value_in_hour
 FROM events
 GROUP BY 1, 2"""
 

@@ -85,50 +85,29 @@ def _numpy_kmeans(feats, k: int, max_iter: int, tol: float, seed: int):
     return centers.tolist(), labels, inertia
 
 
-def load_events_rfm(spark: SparkSession, sf_dir: str, spread: bool = False) -> DataFrame:
-    """RFM over the events table. ``spread=True`` round-robins the scan
-    across all cores first — the driver testdata is one single-row-group
-    file (scan parallelism 1), whereas any real deployment has many
-    splits; benchmarks use it to measure the engine, not the file layout.
-    """
-    events = load_table(spark, sf_dir, "events")
-    if spread:
-        events = events.repartition(spark.sparkContext.defaultParallelism)
-    return FE.compute_rfm(events)
+def load_events_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RFM over the events table."""
+    return FE.compute_rfm(load_table(spark, sf_dir, "events"))
 
 
 def load_retail_rfm(spark: SparkSession, csv_path: str, ref_instant: str) -> DataFrame:
-    """Reference-native load: CSV → filter → TotalAmount → RFM
-    (data.rs:97-191 semantics on the retail schema)."""
-    tx = read_retail_csv(spark, csv_path)
-    tx = tx.filter(
+    """Reference-native load: CSV → row filter → RFM (data.rs:97-191
+    semantics on the retail schema). The filtered rows are projected
+    onto the events columns — customer, invoice date, invoice number and
+    the line amount Quantity·UnitPrice — and go through
+    :func:`features.compute_rfm`, so both inputs share one RFM rule."""
+    tx = read_retail_csv(spark, csv_path).filter(
         (F.col("Quantity") > 0)
         & (F.col("UnitPrice") > 0)
         & F.col("CustomerID").isNotNull()
-    ).withColumn("TotalAmount", F.col("Quantity") * F.col("UnitPrice"))
-    rfm = (
-        tx.groupBy("CustomerID")
-        .agg(
-            F.max("InvoiceDate").alias("last_ts"),
-            F.countDistinct("InvoiceNo").cast("double").alias("frequency"),
-            F.sum("TotalAmount").alias("monetary"),
-        )
-        .withColumn(
-            "recency",
-            (
-                F.unix_micros(F.to_timestamp(F.lit(ref_instant)))
-                - F.unix_micros("last_ts")
-            ).cast("double")
-            / F.lit(86_400_000_000.0),
-        )
-        .select(
-            F.col("CustomerID").alias("user_id"), "recency", "frequency", "monetary"
-        )
-        .filter(
-            (F.col("recency") >= 0) & (F.col("frequency") > 0) & (F.col("monetary") > 0)
-        )
     )
-    return rfm
+    events = tx.select(
+        F.col("CustomerID").alias("user_id"),
+        F.col("InvoiceDate").alias("ts"),
+        F.col("InvoiceNo").alias("event_id"),
+        (F.col("Quantity") * F.col("UnitPrice")).alias("value"),
+    )
+    return FE.compute_rfm(events, ref_instant)
 
 
 def run_full_pipeline(

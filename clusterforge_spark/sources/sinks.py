@@ -123,9 +123,11 @@ def _money_total_expr():
     (each has a DuckDB oracle mirroring this exact op order)."""
     from pyspark.sql import functions as F
 
+    from clusterforge_spark.functions.rounding import cents_sql
+
     return F.expr(
-        "round(cast(sum(cast(cast(floor(o_totalprice * 100 + 0.5) as bigint)"
-        " as decimal(38,0))) as double) / 100.0, 2)"
+        f"round(cast(sum(cast({cents_sql('o_totalprice')} as decimal(38,0)))"
+        " as double) / 100.0, 2)"
     ).alias("total_value")
 
 
@@ -175,7 +177,7 @@ def roundtrip_jsonl_doc_stats(documents: DataFrame, base_dir: str | None = None)
 
 def roundtrip_orc_order_stats(orders: DataFrame, base_dir: str | None = None) -> DataFrame:
     """ORC connector proof: orders through the ORC sink and back, then
-    an exact-cent revenue aggregate per status — decimal money sums make
+    an exact-cent revenue aggregate per status — exact cents sums make
     any value-level roundtrip corruption a hard oracle failure. Same
     eager-write contract as :func:`roundtrip_jsonl_doc_stats`."""
     from pyspark.sql import functions as F

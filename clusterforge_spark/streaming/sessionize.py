@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as PW
 
+from clusterforge_spark.functions.rounding import cents
 from clusterforge_spark.sources.readers import (
     TABLE_SCHEMAS,
     _events_schema,
@@ -150,7 +151,7 @@ def hourly_user_counts(events_stream: DataFrame, watermark: str = "2 hours") -> 
         .groupBy(F.window("ts", "1 hour").alias("win"), F.col("user_id"))
         .agg(
             F.count("*").alias("events_in_hour"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("value_in_hour"),
+            (F.sum(cents("value")) / 100.0).alias("value_in_hour"),
         )
         .select(
             "user_id",
@@ -349,9 +350,7 @@ def session_window_counts_stream(
         )
         .agg(
             F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias(
-                "session_value"
-            ),
+            (F.sum(cents("value")) / 100.0).alias("session_value"),
         )
         .select(
             "user_id",
@@ -1345,7 +1344,7 @@ def run_stream_gap_sessions_replay(
     The float ``session_value`` is deliberately dropped: the Python fold
     rounds with round-half-even over a sequential float sum, which has
     no bit-mirrorable SQL twin (the value surface is already
-    oracle-gated by q_stream_session_window_replay's decimal-exact
+    oracle-gated by q_stream_session_window_replay's exact cents
     sums); the remaining columns are exact integers."""
     snaps = run_stream_replay_to_parquet(
         spark,

@@ -19,7 +19,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -35,7 +36,7 @@ def main() -> int:
     spark = get_spark("explain-plans", shuffle_partitions=8)
     qs = E.queries()
     names = only or list(qs)
-    out_dir = os.path.join("/root/repo/plans", tag)
+    out_dir = os.path.join(REPO, "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
 
     def _explain(df) -> str:

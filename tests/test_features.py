@@ -128,6 +128,37 @@ def test_rfm_money_sum_past_long_range_raises(spark, tmp_path):
         rfm.collect()
 
 
+def test_rfm_amount_without_bigint_cents_raises(spark, tmp_path):
+    """A customer whose only amount is 1e17 has no bigint cents (1e19 is
+    past 2^63): compute_rfm raises instead of reporting 2^63 − 1 saturated
+    cents, and the oracle's CAST raises on the same input."""
+    import duckdb
+    from pyspark.errors import SparkRuntimeException
+
+    _, rfm = _rfm_of(spark, tmp_path, [(1, 1e17), (2, 1.0)])
+    with pytest.raises(SparkRuntimeException, match="no bigint cents"):
+        rfm.collect()
+    with pytest.raises(duckdb.Error):
+        _oracle_rfm(tmp_path)
+
+
+def test_hourly_value_sum_follows_the_cents_rule_like_the_oracle(spark, tmp_path):
+    """window_sessionize's hourly money sum goes through rounding.cents: a
+    3-dp 0.285 counts as 0.28 (a decimal cast of its shortest repr gives
+    0.29), and the oracle's rows are identical."""
+    import duckdb
+
+    from clusterforge_spark.operators.relational import window_sessionize
+    from clusterforge_spark.oracle_sql import q_window_sessionize
+
+    events, _ = _rfm_of(spark, tmp_path, [(1, 0.285), (2, 1.115), (3, 0.29)])
+    got = sorted(tuple(r) for r in window_sessionize(events).collect())
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{tmp_path}/events.parquet')")
+    assert [r[3] for r in got] == [0.28, 1.12, 0.29]
+    assert got == sorted(con.execute(q_window_sessionize()).fetchall())
+
+
 def test_compute_rfm_plan_one_exchange_no_wide_decimal(spark, tmp_path):
     """One hash exchange on user_id carries the whole aggregate chain, and
     no decimal(28,2) accumulator is left in the plan (a fresh file, so no
